@@ -6,14 +6,5 @@ set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF" "$OUT"
-python3 /root/repo/scripts/check_oracle.py "$SF" "$OUT"
+"$(dirname "$0")/run_main.sh" graft.Verify "$SF" "$OUT"
+python3 "$(dirname "$0")/check_oracle.py" "$SF" "$OUT"

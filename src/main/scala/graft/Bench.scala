@@ -19,7 +19,7 @@ object Bench {
     // two full passes, report the per-query MIN: a single pass is at
     // the mercy of machine contention (round 6's record showed 10-24x
     // phantom regressions on untouched queries), and min-of-two warm
-    // passes tracks the steady state the way QuickTime does.
+    // passes tracks the steady state, as `Probe time`'s warm pass does.
     val passes = math.max(1,
       sys.env.get("SPARK_GRAFT_BENCH_PASSES")
         .flatMap(_.toIntOption).getOrElse(2))

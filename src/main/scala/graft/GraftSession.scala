@@ -38,20 +38,16 @@ object GraftSession {
   def local(appName: String = "graft"): SparkSession =
     builder(appName, Some(s"local[*]")).getOrCreate()
 
-  /** The ONE session configuration for the benchmark/dev mains (Bench,
-    * Verify, QuickTime, ScaleStress, StageProfile): local master sized
-    * by SPARK_GRAFT_CPUS, shuffle partitions = cores, UI off, UTC,
-    * TIMESTAMP(NANOS) shim — defined once so every tool measures the
-    * same engine configuration (the copies had already drifted once).
+  /** The ONE session configuration for the mains (Bench, Verify, Smoke,
+    * Probe, ScaleStress): [[builder]] with the extensions on — the engine
+    * as it ships — on a local master sized by SPARK_GRAFT_CPUS, shuffle
+    * partitions = cores, UI off.
     */
   def toolSession(defaultCpus: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = builder(master = Some(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

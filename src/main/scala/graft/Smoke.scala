@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner: drives SparkEntry.entry (the driver's t1 smoke),
   * a named query's formatted plan, or ad-hoc SQL over registered views.
   *
@@ -11,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.toolSession(defaultCpus = "4")
     spark.sparkContext.setLogLevel("ERROR")
     args.toList match {
       case "sql" :: query :: rest =>

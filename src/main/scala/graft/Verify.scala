@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,12 +9,27 @@ object Verify {
     val spark = GraftSession.toolSession(defaultCpus = "32")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try dump(fn(spark, sfDir), s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    writeOracleSql(outDir, SparkEntry.oracleSql)
+    val gateFailures = qualityGate(spark, outDir)
+    spark.stop()
+    if (gateFailures.nonEmpty) {
+      gateFailures.foreach(f => System.err.println(s"[verify] GATE FAIL: $f"))
+      sys.exit(1)
+    }
+  }
+
+  /** One query's result as the driver reads it: a single parquet file
+    * under `path`. */
+  def dump(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+  /** `outDir/oracle_sql.json`: name → oracle SQL, one JSON object. */
+  def writeOracleSql(outDir: String, sql: Iterable[(String, String)]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -27,15 +42,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val gateFailures = qualityGate(spark, outDir)
-    spark.stop()
-    if (gateFailures.nonEmpty) {
-      gateFailures.foreach(f => System.err.println(s"[verify] GATE FAIL: $f"))
-      sys.exit(1)
-    }
   }
 
   /** Enforced quality floors for the approximate paths whose driver rows

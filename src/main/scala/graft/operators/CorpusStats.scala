@@ -71,15 +71,13 @@ object CorpusStats {
     * rides along as a broadcast single-row frame, like tfIdf's N. The
     * same counts table serves any number of scoring passes.
     */
-  /** Shared front-end of the bigram-LM operators and their profiling
-    * harness (one definition, so the profiler always times the SAME
-    * reduction the queries run): tokenized docs (≥ 2 tokens, extra
-    * tag columns riding along) and the per-(doc[, tags], bigram)
-    * instance counts. Bigrams are "w1 w2" strings (zip of the n−1
-    * prefix with the n−1 suffix): a flat join key — no struct
-    * comparators on the shuffle.
+  /** Shared front-end of the bigram-LM operators: tokenized docs
+    * (≥ 2 tokens, extra tag columns riding along) and the
+    * per-(doc[, tags], bigram) instance counts. Bigrams are "w1 w2"
+    * strings (zip of the n−1 prefix with the n−1 suffix): a flat join
+    * key — no struct comparators on the shuffle.
     */
-  private[graft] def bigramPerDoc(docs: DataFrame, idCol: String,
+  private def bigramPerDoc(docs: DataFrame, idCol: String,
       textCol: String, extra: Seq[(String, Column)] = Nil)
       : (DataFrame, DataFrame) = {
     val toks = filter(TextDedup.tokens(col(textCol)), x => length(x) > 0)

@@ -325,17 +325,7 @@ object Similarity {
     * scan + two argmax kernels + the centroid join, never the k-means.
     */
   private[graft] def semCells(corpus: DataFrame, idCol: String,
-      vecCol: String, nlist: Int, refineIters: Int): DataFrame =
-    semCells(corpus, idCol, vecCol, nlist, refineIters, MaxDriverNlist)
-
-  /** [[semCells]] with the single-vs-two-level threshold exposed —
-    * production always uses [[MaxDriverNlist]]; the override exists so
-    * the crossover harness (tools.T46Crossover) can time BOTH paths at
-    * the same nlist.
-    */
-  private[graft] def semCells(corpus: DataFrame, idCol: String,
-      vecCol: String, nlist: Int, refineIters: Int,
-      maxDriver: Int): DataFrame = {
+      vecCol: String, nlist: Int, refineIters: Int): DataFrame = {
     import graft.functions.VectorFunctions.argmax_cells
     import org.apache.spark.sql.expressions.Window
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
@@ -344,7 +334,7 @@ object Similarity {
     // MaxDriverNlist the flat assign is already linear in N with
     // bounded driver state, and the fine level's extra jobs (seed
     // window, per-level checkpoints, centroid join) are pure overhead
-    if (nlist <= maxDriver) {
+    if (nlist <= MaxDriverNlist) {
       val seeds = seedCentroids(ids.select(col("vec")), nlist)
       val cents = refineCentroids(ids.select(col("vec")), seeds, refineIters)
       return ids.select(col("id"), col("vec"),

@@ -60,17 +60,6 @@ object TextAnalysis {
     when(best.getField("s") <= 0, "und").otherwise(best.getField("l"))
   }
 
-  /** The stopword_ratio column exactly as qualityMetrics emits it —
-    * exposed so stage probes (tools.StageProfile) time the production
-    * expression, not an approximation of it.
-    */
-  def stopwordRatio(text: Column): Column = {
-    val toks = split(text, "\\s+")
-    val enStop = array(stopwords("en").map(lit): _*)
-    round(size(filter(transform(toks, lower _), w => array_contains(enStop, w)))
-      .cast("double") / size(toks), 6)
-  }
-
   /** Quality metrics (length / punctuation / stopword ratios — the
     * standard cheap filters before expensive pipeline stages).
     */
@@ -79,6 +68,7 @@ object TextAnalysis {
     val toks = split(t, "\\s+")
     val nChars = length(t)
     val nTokens = size(toks)
+    val enStop = array(stopwords("en").map(lit): _*)
     df.withColumn("n_chars_m", nChars)
       .withColumn("n_tokens", nTokens)
       .withColumn("avg_token_len",
@@ -86,7 +76,9 @@ object TextAnalysis {
       .withColumn("punct_ratio",
         round((nChars - length(regexp_replace(t, "[\\.,;:!\\?]", "")))
           .cast("double") / nChars, 6))
-      .withColumn("stopword_ratio", stopwordRatio(t))
+      .withColumn("stopword_ratio",
+        round(size(filter(transform(toks, lower _), w => array_contains(enStop, w)))
+          .cast("double") / nTokens, 6))
   }
 
   /** Ratio of `textCol`'s characters removed by deleting everything

@@ -16,9 +16,13 @@ object Flows {
     * `sign` is -1 for inputs, +1 for outputs. The division happens in
     * DecimalType (value is DECIMAL(38,9)) and only then casts to double
     * — matching the reference's NUMERIC/1e8 semantics without binary
-    * rounding surprises (SURVEY §7.3).
+    * rounding surprises (SURVEY §7.3). The sign is applied by negation,
+    * which keeps DECIMAL(38,9): multiplying by an integer literal widens
+    * past precision 38, so Spark drops the scale to 7 and the quotient
+    * loses the last satoshi digit.
     */
-  def leg(tx: DataFrame, legCol: String, typeTag: String, sign: Int): DataFrame =
+  def leg(tx: DataFrame, legCol: String, typeTag: String, sign: Int): DataFrame = {
+    val satoshi = if (sign < 0) -col("__satoshi") else col("__satoshi")
     ExplodeOps.explodeLeg(
         tx.select(col("hash").as("txid"), col("block_timestamp"), col(legCol)),
         legCol, addrAs = "addr", valueAs = "__satoshi")
@@ -26,8 +30,8 @@ object Flows {
         col("block_timestamp"), col("txid"),
         lit(typeTag).as("type"),
         col("addr"),
-        (col("__satoshi") * lit(sign) / lit(SatoshisPerBtc))
-          .cast("double").as("val"))
+        (satoshi / lit(SatoshisPerBtc)).cast("double").as("val"))
+  }
 
   /** simple_flow (btcolap.sql:316-360 shape): UNION ALL of the signed
     * input and output legs. unionByName — the reference's positional

@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * HyperLogLog sketches (`approx_count_distinct`) — same plan minus
   * the Expand, the form to run at 100 TB. The exact form is kept
   * because the oracle checks exact values (q42); the approx form is
-  * bounds-checked in ProfilingSpec and timed against it in
-  * StageProfile.
+  * bounds-checked in ProfilingSpec (timings in docs/PERF_NOTES.md).
   *
   * Both variants build the result with the Column API only — column
   * names are carried as struct-field literals, never interpolated into

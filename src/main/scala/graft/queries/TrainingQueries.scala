@@ -239,7 +239,8 @@ object TrainingQueries {
     val agg = StreamingFlows.dailyFlowAgg(stream, "ts", "event_type", "value")
     // ~180 (day, type) keys of state: the session's 32-partition batch
     // default would commit 32 state-store deltas per micro-batch for
-    // state that fits in a handful of stores (T24Profile methodology)
+    // state that fits in a handful of stores (t24's measurement in
+    // docs/PERF_NOTES.md)
     StreamingFlows.withStatePartitions(spark, 8) {
       StreamingFlows.runAvailableNow(spark, agg,
         s"t14_daily_${System.nanoTime}")
@@ -544,7 +545,7 @@ object TrainingQueries {
   private val docFixtures =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private[graft] def rangedEventsFixture(spark: SparkSession, sfDir: String): String =
+  private def rangedEventsFixture(spark: SparkSession, sfDir: String): String =
     eventFixtures.getOrElseUpdate(sfDir, {
       val in = s"${graft.io.TempDirs.create("graft_events4")}/in"
       Tables.events(spark, sfDir)
@@ -600,8 +601,9 @@ object TrainingQueries {
     val balances = StatefulFlows.runningBalances(stream).toDF()
     // 4 state partitions: plenty for ~150 wallet keys, and every batch
     // commits one state-store delta per partition — see
-    // StreamingFlows.withStatePartitions (T24Profile measured 4 a hair
-    // under 8; the per-batch floor is addBatch + 3 checkpoint fsyncs)
+    // StreamingFlows.withStatePartitions (4 measured a hair under 8 in
+    // docs/PERF_NOTES.md; the per-batch floor is addBatch + 3 checkpoint
+    // fsyncs)
     val emitted = graft.streaming.StreamingFlows.withStatePartitions(spark, 4) {
       graft.streaming.StreamingFlows.runAvailableNow(spark,
         balances, s"t24_bal_${System.nanoTime}")

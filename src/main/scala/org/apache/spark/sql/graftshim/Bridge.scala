@@ -43,6 +43,13 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** Block until every listener has seen every event posted so far
+    * (the listener bus is private[spark]), so a listener's counts are
+    * complete when an action returns.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
   /** Register a SQL function on a LIVE session — sessionState is
     * private[sql], so the registry hook has to live in this namespace.
     */

@@ -44,6 +44,19 @@ class ExplodeFlowsSpec extends SparkSpec {
     assert(fees.isEmpty)
   }
 
+  test("Flows.simpleFlow keeps every satoshi digit of a DECIMAL(38,9) value") {
+    // the reference's NUMERIC(38,9) legs, as the parquet chains store them
+    val tx = spark.sql("""SELECT 'tx9' AS hash,
+      TIMESTAMP'2021-09-20 10:00:00' AS block_timestamp,
+      array(named_struct('addresses', array('addrA'),
+        'value', CAST(123456789 AS DECIMAL(38,9)))) AS inputs,
+      array(named_struct('addresses', array('addrB'),
+        'value', CAST(123456781 AS DECIMAL(38,9)))) AS outputs""")
+    val vals = Flows.simpleFlow(tx).select($"type", $"val")
+      .as[(String, Double)].collect().toSet
+    assert(vals == Set(("input", -1.23456789), ("output", 1.23456781)))
+  }
+
   test("Flows.groupedFlow + congruentConstraint: 1:1 distinct pair or many:1 only") {
     val grouped = Flows.groupedFlow(Flows.simpleFlow(Fixtures.txDf(spark)))
     val kept = Flows.congruentConstraint(grouped).select("txid").as[String].collect().toSet
