@@ -38,8 +38,8 @@ object GraftSession {
   def local(appName: String = "graft"): SparkSession =
     builder(appName, Some(s"local[*]")).getOrCreate()
 
-  /** The ONE session configuration for the mains (Bench, Verify, Smoke,
-    * Probe, ScaleStress): [[builder]] with the extensions on — the engine
+  /** The ONE session configuration for the mains (Bench, Verify, Probe,
+    * ScaleStress): [[builder]] with the extensions on — the engine
     * as it ships — on a local master sized by SPARK_GRAFT_CPUS, shuffle
     * partitions = cores, UI off.
     */

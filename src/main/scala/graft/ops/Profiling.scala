@@ -507,7 +507,7 @@ object Profiling {
     * trimmedMean / winsorizedMean / lorenzDeciles are therefore not
     * lazily composable like the rest of the library: constructing one
     * to only `.explain` it still pays the corpus scan (plan-only
-    * tooling such as gen_plans.py should skip or budget these). A
+    * tooling such as `Probe plan` should skip or budget these). A
     * lazy checkpoint is NOT an option — the pinned partitioning is
     * load-bearing (see below) — so this is a documented tradeoff,
     * not an oversight.

@@ -135,9 +135,8 @@ object GraftExtensions {
     * the SQL functions straight into the session's function registry
     * (builder extensions can't be added retroactively).
     */
-  def install(spark: SparkSession,
-              thresholdBytes: Long = DefaultThreshold): Unit = {
-    val rule = SmallDimBroadcast(thresholdBytes)
+  def install(spark: SparkSession): Unit = {
+    val rule = SmallDimBroadcast(DefaultThreshold)
     if (!spark.experimental.extraOptimizations.contains(rule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule

@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftshim.Bridge
 
-import graft.{GraftSession, SparkEntry, Verify}
+import graft.{GraftSession, SparkEntry, SqlFacade, Verify}
+import graft.plans.PlanShape
 
 /** Dev tool: per-query diagnostics on one tool session and one listener.
   *
@@ -17,6 +18,7 @@ import graft.{GraftSession, SparkEntry, Verify}
   *   scripts/run_main.sh graft.tools.Probe trace  [sfDir] [query…]
   *   scripts/run_main.sh graft.tools.Probe plan   [sfDir] [query…]
   *   scripts/run_main.sh graft.tools.Probe verify <sfDir> <outDir> [query…]
+  *   scripts/run_main.sh graft.tools.Probe sql    "<SELECT …>" [sfDir]
   *
   *  - `time`: a warm pass (codegen, IO and shared census builds), then a
   *    measured pass into the noop sink, reporting its wall seconds and
@@ -24,12 +26,17 @@ import graft.{GraftSession, SparkEntry, Verify}
   *    latency-bound, wall ≈ jobs × the per-job floor, so the job count
   *    is the cost model.
   *  - `trace`: `time`, preceded by one line per job of the measured
-  *    pass: wall, tasks, description, and each stage's tasks and seconds.
+  *    pass: wall, tasks, description (`<query> build` or
+  *    `<query> action`), and each stage's tasks and seconds.
   *  - `plan`: the formatted plan (building the DataFrame runs any eager
-  *    jobs the query pays before its action).
+  *    jobs the query pays before its action), then its
+  *    [[graft.plans.PlanShape]] row — the row `docs/plan_shape.tsv`
+  *    holds at sf0.001.
   *  - `verify`: each result as [[graft.Verify]] writes it, plus an
   *    `oracle_sql.json` holding only the named queries, for
   *    `scripts/check_oracle.py <sfDir> <outDir>`.
+  *  - `sql`: the first 20 rows and the row count of one SQL statement
+  *    over the tables registered as views (SqlFacade).
   *
   * sfDir defaults to sf0.1 and the query list to every SparkEntry query.
   * Each query prints one `[probe]` result line; a failing query reports
@@ -39,21 +46,24 @@ object Probe {
   type Query = (SparkSession, String) => DataFrame
 
   private val Usage = "usage: Probe time|trace|plan [sfDir] [query...]\n" +
-    "       Probe verify <sfDir> <outDir> [query...]"
+    "       Probe verify <sfDir> <outDir> [query...]\n" +
+    "       Probe sql \"<SELECT ...>\" [sfDir]"
 
   def main(args: Array[String]): Unit = {
-    val (mode, rest) = args.toList match {
-      case m :: r if Seq("time", "trace", "plan", "verify").contains(m) => (m, r)
+    val (mode, dirs, rest) = args.toList match {
+      case "sql" :: query :: dir if dir.size <= 1 => ("sql", dir, List(query))
+      case m :: r if Seq("time", "trace", "plan", "verify").contains(m) =>
+        val ds = r.takeWhile(_.startsWith("/"))
+        (m, ds, r.drop(ds.size))
       case _ => System.err.println(Usage); sys.exit(2)
     }
-    val dirs = rest.takeWhile(_.startsWith("/"))
     val (sfDir, outDir) = (mode, dirs) match {
       case ("verify", Seq(sf, out)) => (sf, out)
       case (m, ds) if m != "verify" && ds.size <= 1 =>
         (ds.headOption.getOrElse("/root/testdata/sf0.1"), "")
       case _ => System.err.println(Usage); sys.exit(2)
     }
-    val names = Some(rest.drop(dirs.size)).filter(_.nonEmpty)
+    val names = Some(rest).filter(_.nonEmpty)
       .getOrElse(SparkEntry.queries.keys.toList)
     val spark = GraftSession.toolSession(defaultCpus = "32")
     try {
@@ -62,7 +72,13 @@ object Probe {
         graft.queries.TrainingQueries.prewarmFixtures(spark, sfDir)
       }
       if (mode == "verify") new java.io.File(outDir).mkdirs()
-      run(spark, mode, sfDir, outDir, names, SparkEntry.queries.get, println)
+      if (mode == "sql") {
+        SqlFacade.registerTables(spark, sfDir)
+        val df = spark.sql(names.head)
+        df.show(20, truncate = false)
+        println(s"ROWS=${df.count()}")
+      } else
+        run(spark, mode, sfDir, outDir, names, SparkEntry.queries.get, println)
       if (mode == "verify")
         Verify.writeOracleSql(outDir,
           SparkEntry.oracleSql.filter(kv => names.contains(kv._1)))
@@ -71,33 +87,46 @@ object Probe {
 
   /** Runs `mode` over `names` with a [[Census]] attached for the loop
     * only, saying one result line per name; returns the census, which
-    * holds the last measured pass.
+    * holds the last measured pass. Jobs run while a query's DataFrame
+    * is built carry the description `<query> build`, and jobs of its
+    * action `<query> action`.
     */
   private[graft] def run(spark: SparkSession, mode: String, sfDir: String,
       outDir: String, names: Seq[String], lookup: String => Option[Query],
       say: String => Unit): Census = {
-    def noop(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     val census = new Census
-    def probe(name: String, fn: Query): String = mode match {
-      case "time" | "trace" =>
-        noop(fn(spark, sfDir))
-        Bridge.drainListeners(spark)
-        census.reset()
-        val t0 = System.nanoTime()
-        noop(fn(spark, sfDir))
-        val wall = (System.nanoTime() - t0) / 1e9
-        Bridge.drainListeners(spark)
-        if (mode == "trace") census.jobLines.foreach(say)
-        val (jobs, stages, tasks) = census.counts
-        f"$wall%8.2f s  jobs=$jobs%-4d stages=$stages%-5d tasks=$tasks%-6d"
-      case "plan" =>
-        val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
-        say(plan)
-        s"plan, ${plan.linesIterator.size} lines"
-      case "verify" =>
-        Verify.dump(fn(spark, sfDir), s"$outDir/$name")
-        s"wrote $outDir/$name"
+    def probe(name: String, fn: Query): String = {
+      def phase[T](p: String)(body: => T): T = {
+        spark.sparkContext.setJobDescription(s"$name $p")
+        try body finally spark.sparkContext.setJobDescription(null)
+      }
+      def build(): DataFrame = phase("build")(fn(spark, sfDir))
+      def noop(df: DataFrame): Unit =
+        phase("action")(df.write.format("noop").mode("overwrite").save())
+      mode match {
+        case "time" | "trace" =>
+          noop(build())
+          Bridge.drainListeners(spark)
+          census.reset()
+          val t0 = System.nanoTime()
+          noop(build())
+          val wall = (System.nanoTime() - t0) / 1e9
+          Bridge.drainListeners(spark)
+          if (mode == "trace") census.jobLines.foreach(say)
+          val (jobs, stages, tasks) = census.counts
+          f"$wall%8.2f s  jobs=$jobs%-4d stages=$stages%-5d tasks=$tasks%-6d"
+        case "plan" =>
+          val df = build()
+          val plan = df.queryExecution.explainString(FormattedMode)
+          say(plan)
+          say(PlanShape.Header)
+          say(PlanShape.row(name, df))
+          s"plan, ${plan.linesIterator.size} lines"
+        case "verify" =>
+          val df = build()
+          phase("action")(Verify.dump(df, s"$outDir/$name"))
+          s"wrote $outDir/$name"
+      }
     }
     spark.sparkContext.addSparkListener(census)
     try names.foreach { name =>
@@ -133,9 +162,8 @@ object Probe {
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       jobs += 1
-      val props = Option(j.properties)
-      val desc = props.flatMap(p => Option(p.getProperty("spark.job.description")))
-        .orElse(props.flatMap(p => Option(p.getProperty("callSite.short"))))
+      val desc = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
         .getOrElse("?")
       open(j.jobId) = (j.time, desc, j.stageInfos)
     }

@@ -4,19 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM — sbt forks a
-  * single test JVM, so every suite reuses this session).
+  * single test JVM, so every suite reuses this session). Built by the
+  * engine's own factory, so the extensions are on from the first test
+  * and no plan depends on which suites ran before.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
+    val s = GraftSession.builder("graft-test", master = Some("local[4]"))
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

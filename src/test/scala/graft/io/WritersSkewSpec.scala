@@ -25,11 +25,13 @@ class WritersSkewSpec extends SparkSpec {
     val rb = Writers.bucketed(right, "graft_right_b", 8, Seq("k"))
 
     // force the non-broadcast path (both the static and the AQE-runtime
-    // broadcast thresholds): an unbucketed plan would shuffle both sides
+    // broadcast thresholds, and a merge hint, which the engine's
+    // SmallDimBroadcast rule leaves alone): an unbucketed plan would
+    // shuffle both sides
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = lb.join(rb, "k")
+      val joined = lb.join(rb.hint("merge"), "k")
       assert(joined.count() == 5000)
       assert(countShuffles(joined) == 0)
 
@@ -38,7 +40,7 @@ class WritersSkewSpec extends SparkSpec {
       assert(countShuffles(agg) == 0)
 
       // control: the same join on the unbucketed frames DOES shuffle
-      assert(countShuffles(left.join(right, "k")) > 0)
+      assert(countShuffles(left.join(right.hint("merge"), "k")) > 0)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.functions._
 
 class GraftExtensionsSpec extends SparkSpec {
@@ -32,24 +33,17 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("rule leaves large-large joins alone") {
-    GraftExtensions.install(spark, thresholdBytes = 1) // nothing is 'small'
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
-      val a = (1 to 5000).map(i => (i.toLong % 100, i)).toDF("k", "v")
-      val b = (1 to 5000).map(i => (i.toLong % 100, -i)).toDF("k", "w")
-      val joined = a.join(b, "k")
-      joined.collect()
-      val physical = joined.queryExecution.executedPlan.toString
-      assert(!physical.contains("BroadcastHashJoin"),
-        s"rule must not hint with an impossible threshold:\n$physical")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_.isInstanceOf[SmallDimBroadcast])
-    }
+    val a = (1 to 5000).map(i => (i.toLong % 100, i)).toDF("k", "v")
+    val b = (1 to 5000).map(i => (i.toLong % 100, -i)).toDF("k", "w")
+    val analyzed = a.join(b, "k").queryExecution.analyzed
+    def hints(p: LogicalPlan) = p.collect { case j: Join => j.hint }
+    assert(hints(analyzed) == Seq(JoinHint.NONE))
+    // under a 1-byte threshold nothing is 'small': no leg gets a hint
+    assert(hints(SmallDimBroadcast(1)(analyzed)) == Seq(JoinHint.NONE),
+      s"rule must not hint with an impossible threshold:\n$analyzed")
+    // control: the same join's legs are small under the default
+    assert(hints(SmallDimBroadcast(GraftExtensions.DefaultThreshold)(analyzed))
+      .exists(_ != JoinHint.NONE))
   }
   test("native expressions are callable from SQL after live install") {
     GraftExtensions.install(spark)

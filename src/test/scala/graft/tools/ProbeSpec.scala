@@ -31,4 +31,18 @@ class ProbeSpec extends SparkSpec {
     Bridge.drainListeners(spark)
     assert(census.counts == ((jobs, stages, tasks)))
   }
+
+  test("Probe trace names every job of the measured pass by query and phase") {
+    val lines = mutable.ArrayBuffer.empty[String]
+    Probe.run(spark, "trace", sfDir, "", Seq("q1_agg"),
+      SparkEntry.queries.get, lines += _)
+    val jobs = lines.filter(_.startsWith("[probe]   job "))
+    assert(jobs.nonEmpty, lines)
+    val phases = jobs.map { l =>
+      Seq("build", "action").find(p => l.contains(s" q1_agg $p | "))
+        .getOrElse(fail(s"job line without query and phase: $l"))
+    }
+    assert(phases.toSet == Set("build", "action"), jobs)
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
 }
