@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 /** Link-graph analytics for provenance curation. PageRank-style domain
   * authority is a classic corpus-quality prior (a page linked from
@@ -447,33 +450,6 @@ object Graph {
           .as("assortativity"))
   }
 
-  /** k-CORE DECOMPOSITION — exact core numbers for every node of the
-    * undirected simple graph, via distributed H-INDEX ITERATION
-    * (Lü–Chen–Ren–Zhang–Zhang–Zhou, "The H-index of a network node",
-    * 2016): c₀(v) = deg(v); cₜ₊₁(v) = H({cₜ(u) : u ~ v}) where H is
-    * the h-index (the largest h with ≥ h neighbors of value ≥ h).
-    * The sequence is monotone NON-INCREASING per node and its
-    * fixpoint is exactly the core number — termination is an empty
-    * changed-set (frontier) round, and the fixpoint property itself
-    * is an enforceable audit (one extra round changes nothing — the
-    * t265 gate).
-    *
-    * Scale shape: no peeling, no driver-side node state — each round
-    * is one join of the (node, c) table to the undirected edges plus
-    * one per-node h-index. The h-index uses the sorted-rank identity
-    * H = max over ranked neighbors of min(value, rank), computed with
-    * a window PARTITIONED BY node (high-cardinality key — spreads;
-    * per-partition work bounded by degree). Rounds needed in practice
-    * are small (≲ graph diameter); each round's state is one
-    * node-sized (node, c) table, persisted and released like the CC
-    * loop. Core numbers are DATA, not estimates — but the fixpoint is
-    * reached iteratively, so the driver row is rows-only with the
-    * t265 audit enforcing exactness structurally (peeling-invariant +
-    * fixpoint), the t192-family convention.
-    *
-    * Output: (node, degree, core), core ≥ 1 (every node in the edge
-    * table has an edge), core ≤ degree.
-    */
   /** Canonical undirected simple-graph edge table shared by [[kCore]]
     * and its t265 audit (one normalization, so the audit can never
     * silently check a different graph than the decomposition it
@@ -490,16 +466,56 @@ object Graph {
       .unionAll(e0.select(col("v").as("src"), col("u").as("dst")))
   }
 
+  /** k-CORE DECOMPOSITION — exact core numbers for every node of the
+    * undirected simple graph, via distributed H-INDEX ITERATION
+    * (Lü–Chen–Ren–Zhang–Zhang–Zhou, "The H-index of a network node",
+    * 2016): c₀(v) = deg(v); cₜ₊₁(v) = H({cₜ(u) : u ~ v}) where H is
+    * the h-index (the largest h with ≥ h neighbors of value ≥ h).
+    * The sequence is monotone NON-INCREASING per node and its
+    * fixpoint is exactly the core number — termination is an empty
+    * changed-set (frontier) round, and the fixpoint property itself
+    * is an enforceable audit (one extra round changes nothing — the
+    * t265 gate, which re-derives it with the DataFrame [[hIndexRound]]).
+    *
+    * Scale shape: FRONTIER MESSAGE PASSING over a node-keyed state RDD
+    * (value, sorted neighbor ids, the last value heard from each
+    * neighbor, changed flag), hash-partitioned once and persisted.
+    * A node's h-index can only change when a neighbor's value changed,
+    * so each round only the nodes that changed send their value to
+    * their neighbors; the messages are cogrouped with the state under
+    * the state's own partitioner (the state side stays a narrow
+    * dependency, only the messages shuffle), and only the nodes that
+    * heard something recompute their h-index, in the task — a sort of
+    * their degree-sized value array and the ranked identity
+    * H = max over value-desc-ranked neighbors of min(value, rank).
+    * One Spark job per round (the changed count); the set-up adds the
+    * `undirect` plan's own stages. Round 1's frontier is every node;
+    * late rounds touch only the dense cores still settling. Per-node
+    * work and memory are degree-bounded, and there is no driver-side
+    * node state. Partitions: AQE's byte-sized partitioning of the
+    * `undirect` output. Core numbers are DATA, not estimates — but the
+    * fixpoint is reached iteratively, so the driver row is rows-only
+    * with the t265 audit enforcing exactness structurally (peeling-
+    * invariant + fixpoint), the t192-family convention.
+    *
+    * Node ids are integral (TINYINT…BIGINT), held as longs in the
+    * state, as [[Clustering.connectedComponents]] holds its ids.
+    *
+    * Output: (node, degree, core) — node keeps the input column type,
+    * degree and core are BIGINT; core ≥ 1 (every node in the edge
+    * table has an edge), core ≤ degree.
+    */
   def kCore(edges: DataFrame, aCol: String, bCol: String,
             maxRounds: Int = 500): DataFrame =
-    // handle discarded: the persisted loop state backs the returned
+    // handle discarded: the persisted final state backs the returned
     // frame (the connectedComponents convention). Callers that
     // re-materialize the result themselves should use
     // [[kCoreWithRelease]] and free the loop state instead.
     kCoreWithRelease(edges, aCol, bCol, maxRounds)._1
 
-  /** [[kCore]] plus a RELEASE handle for the loop's persisted state
-    * (the final round's labels RDD and the undirected edge table).
+  /** [[kCore]] plus a RELEASE handle for the final round's persisted
+    * state (each earlier round's state is freed as soon as the next
+    * one is cached; a run that fails to converge frees its own).
     * CONTRACT: materialize the returned frame eagerly (e.g.
     * `localCheckpoint(true)`) BEFORE calling the handle — after
     * release the frame cannot recompute. Exists so a caller that
@@ -508,59 +524,62 @@ object Graph {
     */
   private[graft] def kCoreWithRelease(edges: DataFrame, aCol: String,
       bCol: String, maxRounds: Int = 500): (DataFrame, () => Unit) = {
-    // every round joins the undirected table — persisted with its own
-    // handle so the caller-side release can free it too
-    val (und, releaseUnd) = Clustering.materialize(undirect(edges, aCol, bCol))
-    val degrees = und.groupBy(col("dst").as("node"))
-      .agg(count(lit(1)).as("c"))
-    var (labels, release) = Clustering.materialize(degrees)
-    // FRONTIER iteration (the part that makes long convergence tails
-    // affordable): a node's h-index can only change when a NEIGHBOR's
-    // value changed, so each round recomputes exactly the neighbors
-    // of the previous round's changed set. Round 1's frontier is
-    // every node; after a few rounds the frontier collapses to the
-    // dense cores still settling, and each late round touches only
-    // their incident edges instead of the whole graph. Termination is
-    // frontier-empty — no separate convergence probe.
-    var frontier = labels.select(col("node"))
+    val und = undirect(edges, aCol, bCol)
+    val node = und.schema("dst")
+    require(Seq(LongType, IntegerType, ShortType, ByteType)
+      .contains(node.dataType), s"kCore node ids must be integral, got ${node.dataType}")
+    // (dst, src) pairs; building the RDD runs the plan's AQE stages, so
+    // its partition count is already sized by bytes
+    val pairs = und.select(col("dst").cast("long"), col("src").cast("long"))
+      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val part = new HashPartitioner(pairs.getNumPartitions max 1)
+    // every state is a LOCAL CHECKPOINT (persisted, lineage cut after
+    // the job that fills it), so a round's job neither re-lists nor
+    // re-serializes the rounds before it
+    var state = pairs.groupByKey(part)
+      .mapValues(ns => KCoreNode.initial(ns.toArray))
+      .localCheckpoint()
     var active = 1L
     var round = 0
     while (active > 0 && round < maxRounds) {
-      val touch = und
-        .join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst")).distinct()
-      val newVals = hIndexRound(und.join(touch, "dst"), labels)
-      // ONE materialized frame per round carrying both the merged
-      // labels and the changed flag (monotone: only strict decreases
-      // are real changes) — the frontier and the convergence count
-      // read its cache instead of running their own jobs
-      val merged = labels.withColumnRenamed("c", "c_old")
-        .join(newVals.withColumnRenamed("c", "c_new"), Seq("node"), "left")
-        .select(col("node"),
-          when(col("c_new") < col("c_old"), col("c_new"))
-            .otherwise(col("c_old")).as("c"),
-          (col("c_new") < col("c_old")).as("chg"))
-      val (next, releaseNew) = Clustering.materialize(merged)
-      active = next.filter(col("chg")).count() // settles the cache too
-      release() // the superseded round; frontier reads `next`'s cache
-      labels = next.select(col("node"), col("c"))
-      release = releaseNew
-      frontier = next.filter(col("chg")).select(col("node"))
+      val prev = state
+      val msgs = prev.flatMap { case (v, s) =>
+        if (s.changed) s.nbrs.iterator.map(u => (u, (v, s.c)))
+        else Iterator.empty
+      }
+      state = prev.cogroup(msgs, part)
+        .flatMapValues { case (ss, ms) => ss.map(_.receive(ms)) }
+        .localCheckpoint()
+      active = state.filter(_._2.changed).count() // the round's one job
+      prev.unpersist(blocking = false)
       round += 1
-      if (sys.props.contains("graft.kcore.debug"))
-        println(s"[kcore] round $round active=$active")
     }
-    if (active > 0)
+    val fin = state
+    val release = () => { fin.unpersist(blocking = false); () }
+    if (active > 0) {
+      release()
       throw new IllegalStateException(
         s"kCore did not converge in $maxRounds rounds")
-    // the FINAL labels stay persisted until the returned handle fires
-    // (releasing here would force the whole iteration chain to
-    // recompute on first read)
-    val out = labels.select(col("node"), col("c").as("core"))
-      .join(degrees.select(col("node"), col("c").as("degree")), "node")
-      .select(col("node"), col("degree"), col("core"))
-    val rel = release
-    (out, () => { rel(); releaseUnd() })
+    }
+    // core is declared nullable: kCore's published schema (t264's
+    // result files carry it)
+    val schema = StructType(Seq(node.copy(name = "node", dataType = LongType),
+      StructField("degree", LongType, nullable = false),
+      StructField("core", LongType, nullable = true)))
+    val out = und.sparkSession.createDataFrame(
+        fin.map { case (v, s) => Row(v, s.nbrs.length.toLong, s.c) }, schema)
+      .select(col("node").cast(node.dataType).as("node"), col("degree"),
+        col("core"))
+    (out, release)
+  }
+
+  /** The h-index of `vals` (all ≥ 1): max over the values ranked
+    * 1.. in descending order of min(value, rank) — [[hIndexRound]]'s
+    * identity, on one node's array.
+    */
+  private[operators] def hIndex(vals: Array[Long]): Long = {
+    val s = vals.sorted // ascending: rank i sits at s(n - i)
+    (1 to s.length).iterator.map(i => math.min(s(s.length - i), i.toLong)).max
   }
 
   /** One h-index refinement round: for every node, the h-index of its
@@ -577,5 +596,38 @@ object Graph {
       .withColumn("__rn", row_number().over(w))
       .groupBy(col("dst").as("node"))
       .agg(max(least(col("cn"), col("__rn"))).as("c"))
+  }
+}
+
+/** One node of [[Graph.kCoreWithRelease]]'s state: its current value
+  * `c`, its neighbor ids in ascending order, the last value heard
+  * from each (aligned with `nbrs`), and whether `c` fell in the round
+  * that produced this state.
+  */
+private[operators] final case class KCoreNode(c: Long, nbrs: Array[Long],
+    vals: Array[Long], changed: Boolean) {
+
+  /** The next round's state after `msgs` (neighbor, value): a node that
+    * heard nothing keeps its value; one that did recomputes its
+    * h-index, and only a strict decrease counts as a change.
+    */
+  def receive(msgs: Iterable[(Long, Long)]): KCoreNode =
+    if (msgs.isEmpty) copy(changed = false)
+    else {
+      val heard = vals.clone()
+      msgs.foreach { case (u, x) =>
+        heard(java.util.Arrays.binarySearch(nbrs, u)) = x }
+      val h = Graph.hIndex(heard)
+      KCoreNode(math.min(h, c), nbrs, heard, h < c)
+    }
+}
+
+private[operators] object KCoreNode {
+  /** Round 0: the value is the degree, and every node counts as
+    * changed, so round 1 sends every degree to every neighbor.
+    */
+  def initial(nbrs: Array[Long]): KCoreNode = {
+    java.util.Arrays.sort(nbrs)
+    KCoreNode(nbrs.length.toLong, nbrs, new Array[Long](nbrs.length), changed = true)
   }
 }

@@ -133,11 +133,14 @@ object GraftExtensions {
   /** Install on an already-running session: the optimizer rule via
     * extraOptimizations, the as-of strategy via extraStrategies, and
     * the SQL functions straight into the session's function registry
-    * (builder extensions can't be added retroactively).
+    * (builder extensions can't be added retroactively). The rule is
+    * skipped when the optimizer already runs it — a session built with
+    * [[GraftExtensions]] has it injected.
     */
   def install(spark: SparkSession): Unit = {
     val rule = SmallDimBroadcast(DefaultThreshold)
-    if (!spark.experimental.extraOptimizations.contains(rule))
+    if (!org.apache.spark.sql.graftshim.Bridge.optimizerRules(spark)
+        .contains(rule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule
     AsOfJoinStrategy.install(spark)

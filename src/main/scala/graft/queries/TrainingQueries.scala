@@ -5989,12 +5989,12 @@ object TrainingQueries {
   private val kCoreCache = new graft.SessionCache[DataFrame]
   /** t264/t265's graph: co-purchase edges over a deterministic third
     * of the orders. The h-index loop's wall time is rounds × per-round
-    * job latency, and rounds grow with core depth — the FULL
-    * co-purchase graph converges in ~38 rounds at sf0.1 (~80 s of
-    * fixture time for a 20k-node graph, all scheduling overhead, no
-    * data). The thinned graph keeps every structural property the
-    * audit needs (multi-level cores, max_core ≈ 30) at ~1/3 the
-    * rounds; the operator itself is fixture-independent.
+    * job latency (one Spark job per round), and rounds grow with core
+    * depth — the FULL co-purchase graph converges in ~38 rounds at
+    * sf0.1 on a 20k-node graph, all scheduling overhead, no data. The
+    * thinned graph keeps every structural property the audit needs
+    * (multi-level cores, max_core 9 at sf0.1) in 16 rounds; the operator
+    * itself is fixture-independent.
     */
   private def kCoreEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)

@@ -20,14 +20,17 @@ import graft.plans.PlanShape
   *   scripts/run_main.sh graft.tools.Probe verify <sfDir> <outDir> [query…]
   *   scripts/run_main.sh graft.tools.Probe sql    "<SELECT …>" [sfDir]
   *
-  *  - `time`: a warm pass (codegen, IO and shared census builds), then a
+  *  - `time`: first one `[probe] prewarm` line for the session set-up
+  *    (`warmUp` + `prewarmFixtures`, e.g. the k-core fixture); then, per
+  *    query, a warm pass (codegen, IO and shared census builds) and a
   *    measured pass into the noop sink, reporting its wall seconds and
   *    Spark jobs, stages and tasks. At bench scale every query is
   *    latency-bound, wall ≈ jobs × the per-job floor, so the job count
   *    is the cost model.
-  *  - `trace`: `time`, preceded by one line per job of the measured
-  *    pass: wall, tasks, description (`<query> build` or
-  *    `<query> action`), and each stage's tasks and seconds.
+  *  - `trace`: `time`, with each result line preceded by one line per
+  *    job of the prewarm or measured pass: wall, tasks, description
+  *    (`prewarm`, `<query> build` or `<query> action`), and each
+  *    stage's tasks and seconds.
   *  - `plan`: the formatted plan (building the DataFrame runs any eager
   *    jobs the query pays before its action), then its
   *    [[graft.plans.PlanShape]] row — the row `docs/plan_shape.tsv`
@@ -67,10 +70,8 @@ object Probe {
       .getOrElse(SparkEntry.queries.keys.toList)
     val spark = GraftSession.toolSession(defaultCpus = "32")
     try {
-      if (mode == "time" || mode == "trace") {
-        GraftSession.warmUp(spark, sfDir)
-        graft.queries.TrainingQueries.prewarmFixtures(spark, sfDir)
-      }
+      if (mode == "time" || mode == "trace")
+        prewarm(spark, sfDir, mode == "trace", println)
       if (mode == "verify") new java.io.File(outDir).mkdirs()
       if (mode == "sql") {
         SqlFacade.registerTables(spark, sfDir)
@@ -83,6 +84,31 @@ object Probe {
         Verify.writeOracleSql(outDir,
           SparkEntry.oracleSql.filter(kv => names.contains(kv._1)))
     } finally spark.stop()
+  }
+
+  /** Runs `warmUp` + `prewarmFixtures` with a [[Census]] attached and
+    * says one `[probe] prewarm` line with their seconds and Spark jobs,
+    * stages and tasks, after one line per job under `trace`; returns
+    * the census. Its jobs carry the description `prewarm`.
+    */
+  private[graft] def prewarm(spark: SparkSession, sfDir: String,
+      trace: Boolean, say: String => Unit): Census = {
+    val census = new Census
+    spark.sparkContext.addSparkListener(census)
+    val wall = try {
+      val t0 = System.nanoTime()
+      spark.sparkContext.setJobDescription("prewarm")
+      try {
+        GraftSession.warmUp(spark, sfDir)
+        graft.queries.TrainingQueries.prewarmFixtures(spark, sfDir)
+      } finally spark.sparkContext.setJobDescription(null)
+      val w = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListeners(spark)
+      w
+    } finally spark.sparkContext.removeSparkListener(census)
+    if (trace) census.jobLines.foreach(say)
+    say(f"[probe] ${"prewarm"}%-28s ${census.summary(wall)}")
+    census
   }
 
   /** Runs `mode` over `names` with a [[Census]] attached for the loop
@@ -113,8 +139,7 @@ object Probe {
           val wall = (System.nanoTime() - t0) / 1e9
           Bridge.drainListeners(spark)
           if (mode == "trace") census.jobLines.foreach(say)
-          val (jobs, stages, tasks) = census.counts
-          f"$wall%8.2f s  jobs=$jobs%-4d stages=$stages%-5d tasks=$tasks%-6d"
+          census.summary(wall)
         case "plan" =>
           val df = build()
           val plan = df.queryExecution.explainString(FormattedMode)
@@ -154,6 +179,8 @@ object Probe {
     private val lines = mutable.ArrayBuffer.empty[String]
 
     def counts: (Int, Int, Long) = synchronized((jobs, stages, tasks))
+    def summary(wall: Double): String = synchronized(
+      f"$wall%8.2f s  jobs=$jobs%-4d stages=$stages%-5d tasks=$tasks%-6d")
     def jobLines: Seq[String] = synchronized(lines.toList)
     def reset(): Unit = synchronized {
       jobs = 0; stages = 0; tasks = 0L

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. Spark 4 wraps Column around ColumnNode
@@ -49,6 +50,14 @@ object Bridge {
     */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
+  /** Every rule in the session optimizer's batches: the built-in ones,
+    * those injected by session extensions, and
+    * `experimental.extraOptimizations` (sessionState is private[sql]).
+    */
+  def optimizerRules(spark: SparkSession): Seq[Rule[LogicalPlan]] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.optimizer.batches.flatMap(_.rules)
 
   /** Register a SQL function on a LIVE session — sessionState is
     * private[sql], so the registry hook has to live in this namespace.

@@ -1,5 +1,11 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.{IntegerType, LongType}
+
 import graft.SparkSpec
 
 class GraphSpec extends SparkSpec {
@@ -251,14 +257,15 @@ class GraphSpec extends SparkSpec {
     core.toMap
   }
 
+  // K5 on nodes 0-4 (core 4), bridge 4-10-11 into the triangle
+  // 11-12-13 (core 2 — node 10's both neighbors survive the 2-core,
+  // so 10 is core 2 as well), and a pendant 14 off 10 (core 1)
+  private val k5Tail = (for (i <- 0L until 5L; j <- (i + 1) until 5L)
+    yield (i, j)) ++ Seq((4L, 10L), (10L, 11L), (11L, 12L), (12L, 13L),
+    (11L, 13L), (10L, 14L))
+
   test("kCore matches brute-force peeling: planted K5 clique + tail") {
-    // K5 on nodes 0-4 (core 4), bridge 4-10-11 into the triangle
-    // 11-12-13 (core 2 — node 10's both neighbors survive the 2-core,
-    // so 10 is core 2 as well), and a pendant 14 off 10 (core 1)
-    val k5 = for (i <- 0L until 5L; j <- (i + 1) until 5L) yield (i, j)
-    val extra = Seq((4L, 10L), (10L, 11L), (11L, 12L), (12L, 13L),
-      (11L, 13L), (10L, 14L))
-    val edges = k5 ++ extra
+    val edges = k5Tail
     val expected = peelCores(edges)
     val out = Graph.kCore(edges.toDF("a", "b"), "a", "b")
       .collect().map(r => r.getAs[Long]("node") ->
@@ -270,6 +277,89 @@ class GraphSpec extends SparkSpec {
     }
     assert(out(0L)._2 == 4 && out(10L)._2 == 2 &&
       out(13L)._2 == 2 && out(14L)._2 == 1)
+  }
+
+  /** Rounds of the synchronous h-index iteration (every node
+    * recomputed every round) until a round changes nothing, that round
+    * included: the frontier iteration runs exactly as many.
+    */
+  private def hIndexRounds(edges: Seq[(Long, Long)]): Int = {
+    val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .distinct.groupMap(_._1)(_._2)
+    var c = adj.map { case (v, ns) => v -> ns.size.toLong }
+    var rounds = 0
+    var changed = true
+    while (changed) {
+      val next = adj.map { case (v, ns) =>
+        val ranked = ns.map(c).sorted(Ordering[Long].reverse)
+        v -> ranked.zipWithIndex.map { case (x, i) => math.min(x, i + 1L) }.max
+      }
+      changed = next != c
+      c = next
+      rounds += 1
+    }
+    rounds
+  }
+
+  test("kCore runs one Spark job per round plus a fixed set-up") {
+    // a 12-node path: core 1 everywhere, but the degree-1 ends' news
+    // travels inward one node per round
+    val path = (0L until 11L).map(i => (i, i + 1))
+    val rounds = hIndexRounds(path)
+    assert(rounds >= 5)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val cores = try {
+      val out = Graph.kCore(path.toDF("a", "b"), "a", "b")
+        .as[(Long, Long, Long)].collect()
+      Bridge.drainListeners(spark)
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(cores.map(_._3).toSet == Set(1L))
+    // set-up: the undirect plan's distinct stage; after the rounds: the
+    // collect
+    assert(jobs.get <= rounds + 3, s"${jobs.get} jobs for $rounds rounds")
+  }
+
+  test("kCoreWithRelease: after checkpoint + release only the checkpoint stays persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (df, release) = Graph.kCoreWithRelease(k5Tail.toDF("a", "b"), "a", "b")
+    val cp = df.localCheckpoint(true)
+    release()
+    val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(added.size == 1 && added.values.forall(_.isCheckpointed), added)
+    assert(cp.count() == 10)
+    assert(cp.schema.map(f => f.name -> f.dataType) ==
+      Seq("node" -> LongType, "degree" -> LongType, "core" -> LongType))
+  }
+
+  test("kCore that does not converge in maxRounds throws and frees its state") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException](
+      Graph.kCore(k5Tail.toDF("a", "b"), "a", "b", maxRounds = 1))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("kCore on a few hundred nodes with nested dense cores equals " +
+    "peeling; INT ids stay INT") {
+    val rnd = new scala.util.Random(7)
+    // 40 nodes at p=0.45 inside 120 at p=0.08 inside 300 at p=0.01
+    def p(i: Int, j: Int): Double =
+      if (j < 40) 0.45 else if (j < 120) 0.08 else 0.01
+    val edges = for (j <- 0 until 300; i <- 0 until j
+      if rnd.nextDouble() < p(i, j)) yield (i, j)
+    val expected = peelCores(edges.map(e => (e._1.toLong, e._2.toLong)))
+    assert(expected.values.toSet.size >= 4, expected.values.toSet)
+    val out = Graph.kCore(edges.toDF("a", "b"), "a", "b")
+    assert(out.schema("node").dataType == IntegerType)
+    assert(out.as[(Int, Long, Long)].collect()
+      .map(r => r._1.toLong -> r._3).toMap == expected)
   }
 
   test("kCore on a random graph equals peeling; duplicate and self " +

@@ -1,8 +1,10 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{SparkSpec, SqlFacade}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
@@ -45,6 +47,33 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(hints(SmallDimBroadcast(GraftExtensions.DefaultThreshold)(analyzed))
       .exists(_ != JoinHint.NONE))
   }
+  private def smallDimRules(s: SparkSession): Int =
+    Bridge.optimizerRules(s).count(_.isInstanceOf[SmallDimBroadcast])
+
+  test("registerTables adds no second SmallDimBroadcast to a session built with the extensions") {
+    val before = smallDimRules(spark)
+    assert(before >= 1)
+    SqlFacade.registerTables(spark, "/root/testdata/sf0.001")
+    GraftExtensions.install(spark)
+    assert(smallDimRules(spark) == before)
+  }
+
+  test("install adds SmallDimBroadcast once to a session built without the extensions") {
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val plain = try graft.GraftSession.builder(extensions = false).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(plain ne spark)
+    assert(smallDimRules(plain) == 0)
+    GraftExtensions.install(plain)
+    assert(smallDimRules(plain) == 1)
+    GraftExtensions.install(plain)
+    assert(smallDimRules(plain) == 1)
+  }
+
   test("native expressions are callable from SQL after live install") {
     GraftExtensions.install(spark)
     val r = spark.sql(

@@ -32,6 +32,20 @@ class ProbeSpec extends SparkSpec {
     assert(census.counts == ((jobs, stages, tasks)))
   }
 
+  test("Probe prewarm says one line with its seconds and jobs, its job lines under trace") {
+    val lines = mutable.ArrayBuffer.empty[String]
+    val census = Probe.prewarm(spark, sfDir, trace = true, lines += _)
+    val (jobs, _, _) = census.counts
+    assert(jobs >= 1, lines)
+    assert(lines.last.startsWith("[probe] prewarm") &&
+      lines.last.contains(s" s  jobs=$jobs "), lines.last)
+    val jobLines = lines.init
+    assert(jobLines.size == jobs && jobLines.forall(_.startsWith("[probe]   job ")),
+      lines)
+    assert(jobLines.exists(_.contains(" prewarm | ")), jobLines)
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+  }
+
   test("Probe trace names every job of the measured pass by query and phase") {
     val lines = mutable.ArrayBuffer.empty[String]
     Probe.run(spark, "trace", sfDir, "", Seq("q1_agg"),
