@@ -49,12 +49,27 @@ object Tables {
     }
   }
 
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    normalizedEvents(spark, sfDir)(identity)
+
+  /** The events table as a file stream (the BitcoinETL drop-directory
+    * shape): `events.parquet` under `sfDir`, with the batch table's
+    * schema and the same `ts` normalization as [[events]]. An
+    * AvailableNow run reads the whole file in one micro-batch.
+    */
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    normalizedEvents(spark, sfDir)(raw =>
+      graft.streaming.StreamingFlows.source(spark, sfDir, raw.schema,
+        globFilter = Some("events.parquet")))
+
+  /** `from(raw events)` with `ts` normalized; `from` keeps the schema. */
+  private def normalizedEvents(spark: SparkSession, sfDir: String)(
+      from: DataFrame => DataFrame): DataFrame = {
     // defensive: the flag is a runtime SQL conf and the caller's session
     // (e.g. the driver's own smoke harness) may not have set it
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(spark, sfDir, "events")
-    raw.withColumn("ts", normalizedTs(raw.schema("ts").dataType))
+    from(raw).withColumn("ts", normalizedTs(raw.schema("ts").dataType))
   }
   def documents(spark: SparkSession, sfDir: String): DataFrame  = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")

@@ -135,11 +135,8 @@ object Clustering {
         .groupBy(col("dst").as("id"))
         .agg(min(col("label")).as("label"))
       val (next, releaseNew) = materialize(propagated)
-      val tR = System.nanoTime()
       val after = labelSum(next) // the round's ONE action: computes the
                                  // persisted RDD and the convergence sum
-      if (sys.props.contains("graft.cc.debug"))
-        println(f"[cc] round $round ${(System.nanoTime() - tR) / 1e9}%.2f s sum=$after")
       release() // superseded round's blocks go away NOW, not at GC
       labels = next
       release = releaseNew

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.io.MutableTable
 import graft.operators.Pq
 
@@ -35,10 +34,7 @@ object IndexAppend {
   def run(spark: SparkSession, stream: DataFrame, idCol: String,
           vecCol: String, stateBase: String,
           centroids: Array[Seq[Double]],
-          codebook: Array[Array[Array[Double]]],
-          timeoutMs: Long = 120000,
-          keepVersions: Int = 2): DataFrame = {
-    require(keepVersions >= 2, s"keepVersions must be >= 2, got $keepVersions")
+          codebook: Array[Array[Array[Double]]]): DataFrame = {
     // the state schema is the index schema for THIS stream's id type:
     // derive it from a zero-row static frame so openOrInit never
     // guesses (and a resumed run validates against the same shape)
@@ -46,27 +42,12 @@ object IndexAppend {
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         stream.schema),
       idCol, vecCol, centroids, codebook).schema
-    val table = MutableTable.openOrInit(spark, stateBase, indexSchema,
-      keepVersions)
-    @volatile var batches = 0L
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val indexed = Pq.ivfPqIndex(batch, idCol, vecCol, centroids, codebook)
-          .localCheckpoint() // must not lazily re-read state mid-mutation
-        table.upsert(indexed, Seq("id"))
-        batches += 1
-        ()
-      }
-      .start()
-    val finished = q.awaitTermination(timeoutMs)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"index-append stream did not finish within ${timeoutMs}ms")
+    val table = MutableTable.openOrInit(spark, stateBase, indexSchema)
+    StreamingFlows.runEachBatch(spark, stream, "index_append") { batch =>
+      val indexed = Pq.ivfPqIndex(batch, idCol, vecCol, centroids, codebook)
+        .localCheckpoint() // must not lazily re-read state mid-mutation
+      table.upsert(indexed, Seq("id"))
     }
-    require(batches > 0, "stream produced no batches")
     table.read()
   }
 }

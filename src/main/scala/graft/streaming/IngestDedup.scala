@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.functions.BloomFunctions
 import graft.io.MutableTable
 import graft.operators.IncrementalDedup
@@ -69,12 +68,8 @@ object IngestDedup {
   def runKeepFirst(spark: SparkSession, stream: DataFrame,
                    textCol: String, idCol: String, stateBase: String,
                    expectedItems: Long, fpp: Double = 0.01,
-                   timeoutMs: Long = 120000,
-                   keepVersions: Int = 2,
                    maxSketchBytes: Long = 256L << 20): DataFrame = {
-    require(keepVersions >= 2, s"keepVersions must be >= 2, got $keepVersions")
-    val table = MutableTable.openOrInit(spark, stateBase, stream.schema,
-      keepVersions)
+    val table = MutableTable.openOrInit(spark, stateBase, stream.schema)
     val nShards = pickShards(expectedItems, fpp, maxSketchBytes)
     if (nShards == 0)
       System.err.println(s"[ingest-dedup] no shard count <= $MaxShards fits " +
@@ -92,37 +87,23 @@ object IngestDedup {
         IncrementalDedup.shardedSketchOf(table.read(), textCol,
           expectedItems, fpp, nShards)
       else null
-    @volatile var batches = 0L
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val firstInBatch = Dedup.keepFirst(batch, Seq(textCol),
-          Seq(col(idCol).asc))
-        val survivors = (if (nShards > 0)
-            IncrementalDedup.filterNewSharded(firstInBatch, table.read(),
-              textCol, sketch)
-          else
-            IncrementalDedup.filterNewExact(firstInBatch, table.read(),
-              textCol))
-          .localCheckpoint()  // upsert + sketch both consume it; and it
-                              // must not lazily re-read state mid-mutation
-        table.upsert(survivors, Seq(textCol))
-        if (nShards > 0)
-          sketch = IncrementalDedup.mergeSharded(sketch,
-            IncrementalDedup.shardedSketchOf(survivors, textCol,
-              expectedItems, fpp, nShards))
-        batches += 1
-        ()
-      }
-      .start()
-    val finished = q.awaitTermination(timeoutMs)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"ingest-dedup stream did not finish within ${timeoutMs}ms")
+    StreamingFlows.runEachBatch(spark, stream, "ingest_dedup") { batch =>
+      val firstInBatch = Dedup.keepFirst(batch, Seq(textCol),
+        Seq(col(idCol).asc))
+      val survivors = (if (nShards > 0)
+          IncrementalDedup.filterNewSharded(firstInBatch, table.read(),
+            textCol, sketch)
+        else
+          IncrementalDedup.filterNewExact(firstInBatch, table.read(),
+            textCol))
+        .localCheckpoint()  // upsert + sketch both consume it; and it
+                            // must not lazily re-read state mid-mutation
+      table.upsert(survivors, Seq(textCol))
+      if (nShards > 0)
+        sketch = IncrementalDedup.mergeSharded(sketch,
+          IncrementalDedup.shardedSketchOf(survivors, textCol,
+            expectedItems, fpp, nShards))
     }
-    require(batches > 0, "stream produced no batches")
     table.read()
   }
 

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming ingest — the reference's stated-but-unbuilt
@@ -37,23 +39,6 @@ object StreamingFlows {
       .select(col("day_window.start").as("day"), col(typeCol),
               col("total"), col("n"))
 
-  /** Watermarked windowed QUANTILES — streaming latency/size-percentile
-    * monitoring (the p50/p95/p99-per-window readout every ingest
-    * pipeline watches): per finalized 1-day window and key, quantiles
-    * of `valCol` via `percentile_approx`, whose Greenwald–Khanna
-    * sketch lives IN the streaming aggregation state — buffer size is
-    * bounded by `accuracy`, never by window row count, and partials
-    * merge across shuffle/micro-batches like any imperative aggregate
-    * (the t71 Misra–Gries pattern, with Spark's own built-in).
-    *
-    * Exactness contract: GK's rank error is ≤ n/accuracy, so whenever
-    * a window holds fewer than `accuracy` rows the error bound is
-    * < 1 rank — the returned elements are EXACT order statistics and
-    * the t86 oracle replays them as plain rank picks. At true scale
-    * the same query holds `accuracy` as the state bound and the
-    * result is rank-bounded approximate; the accuracy knob IS the
-    * state-vs-precision trade, stated rather than hidden.
-    */
   /** Streaming mergeable-sketch maintenance (the t91 daily HLL table
     * kept current by the stream itself): a watermarked 1-day window
     * whose aggregation state IS the HLL sketch — fixed ≤ ~2^lgK bytes
@@ -74,6 +59,23 @@ object StreamingFlows {
       .agg(hll_sketch_agg(col(keyCol), lgK).as("sk"))
       .select(to_date(col("day_window.start")).as("day"), col("sk"))
 
+  /** Watermarked windowed QUANTILES — streaming latency/size-percentile
+    * monitoring (the p50/p95/p99-per-window readout every ingest
+    * pipeline watches): per finalized 1-day window and key, quantiles
+    * of `valCol` via `percentile_approx`, whose Greenwald–Khanna
+    * sketch lives IN the streaming aggregation state — buffer size is
+    * bounded by `accuracy`, never by window row count, and partials
+    * merge across shuffle/micro-batches like any imperative aggregate
+    * (the t71 Misra–Gries pattern, with Spark's own built-in).
+    *
+    * Exactness contract: GK's rank error is ≤ n/accuracy, so whenever
+    * a window holds fewer than `accuracy` rows the error bound is
+    * < 1 rank — the returned elements are EXACT order statistics and
+    * the t86 oracle replays them as plain rank picks. At true scale
+    * the same query holds `accuracy` as the state bound and the
+    * result is rank-bounded approximate; the accuracy knob IS the
+    * state-vs-precision trade, stated rather than hidden.
+    */
   def dailyQuantiles(stream: DataFrame, tsCol: String, typeCol: String,
                      valCol: String, watermark: String = "1 day",
                      accuracy: Int = 10000): DataFrame =
@@ -150,44 +152,80 @@ object StreamingFlows {
         col(rightTime) <= col(leftTime),
       "inner")
 
-  /** Run `body` with the session's shuffle-partition count (which also
-    * sets a stateful query's state-partition count — fixed at the
-    * query's FIRST start for its whole life) temporarily set to `n`,
-    * restoring the previous value after. State partitioning is a
-    * per-query sizing decision: every micro-batch commits one
-    * state-store delta per partition, so a low-cardinality keyed stream
-    * on a wide session default pays batches × partitions tiny commits
-    * for rows that fit in a handful of stores. Size to expected key
-    * cardinality / executor count, not to the batch-shuffle default.
-    */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Run a streaming frame to a named in-memory sink, processing
-    * everything currently available, then stop. Returns the result
-    * table. (Local harness: AvailableNow ≡ batch-complete semantics.)
+  /** Run `streamed` to completion into an in-memory sink (AvailableNow:
+    * everything currently available, then stop) and return its rows.
+    * `name` prefixes the query name, which gets a unique suffix; the
+    * sink's temp view is dropped once the returned frame has resolved
+    * it, so the frame keeps the rows and the catalog does not.
+    *
+    * `statePartitions` > 0 sets a stateful query's state-partition
+    * count (0 keeps the session's `spark.sql.shuffle.partitions`).
+    * Every micro-batch commits one state-store delta per partition, so
+    * size it to key cardinality / executor count, not to the
+    * batch-shuffle default. The count is set on the session for
+    * `start()` only: the query clones the session there and plans
+    * every batch on the clone, so the caller's session and concurrent
+    * work keep their own value; runner calls start one at a time, so
+    * they cannot see each other's count. (Not
+    * `spark.newSession()`: its own `StreamingQueryManager` would hide
+    * the stream from listeners on the caller's `spark.streams`, and
+    * each new manager adds a listener bus the SparkContext never
+    * removes.)
     */
   def runAvailableNow(spark: SparkSession, streamed: DataFrame,
-                      name: String, outputMode: String = "append",
-                      timeoutMs: Long = 120000): DataFrame = {
-    val q: StreamingQuery = streamed.writeStream
-      .format("memory").queryName(name)
-      .outputMode(outputMode)
+                      name: String, statePartitions: Int = 0): DataFrame = {
+    val unique = uniqueName(name)
+    try {
+      run(spark, streamed.writeStream.format("memory"), unique,
+        statePartitions)
+      spark.table(unique)
+    } finally spark.catalog.dropTempView(unique)
+  }
+
+  /** The foreachBatch form of [[runAvailableNow]], for sinks that merge
+    * into a table: `body` gets each micro-batch's rows. Fails if the
+    * stream produced no batch.
+    */
+  def runEachBatch(spark: SparkSession, streamed: DataFrame, name: String)(
+      body: DataFrame => Unit): Unit = {
+    val batches = new AtomicLong
+    val writer = streamed.writeStream.foreachBatch {
+      (batch: DataFrame, _: Long) => body(batch); batches.incrementAndGet(); ()
+    }
+    run(spark, writer, uniqueName(name), statePartitions = 0)
+    require(batches.get > 0, "stream produced no batches")
+  }
+
+  private val runs = new AtomicLong
+  private def uniqueName(name: String): String =
+    s"${name}_${runs.incrementAndGet()}"
+
+  private val TimeoutMs = 120000L
+
+  /** Start `writer` as query `name` (AvailableNow, append) and wait for
+    * it; past [[TimeoutMs]] stop it and throw — a partially-filled sink
+    * silently masquerading as the complete result is worse than failing.
+    * Starts hold this object's lock, so no start reads or restores
+    * another call's `statePartitions` swap.
+    */
+  private[streaming] def run(spark: SparkSession, writer: DataStreamWriter[Row],
+                             name: String, statePartitions: Int): Unit = {
+    require(statePartitions >= 0, s"statePartitions must be >= 0, got $statePartitions")
+    val w = writer.queryName(name).outputMode("append")
       .trigger(Trigger.AvailableNow())
-      .start()
-    val finished = q.awaitTermination(timeoutMs)
-    if (!finished) {
-      // a partially-filled sink silently masquerading as the complete
-      // result is worse than failing — stop and say so
+    val q = synchronized {
+      if (statePartitions == 0) w.start() else {
+        val key = "spark.sql.shuffle.partitions"
+        val prev = spark.conf.get(key)
+        spark.conf.set(key, statePartitions.toString)
+        try w.start() finally spark.conf.set(key, prev)
+      }
+    }
+    if (!q.awaitTermination(TimeoutMs)) {
       q.stop()
       throw new IllegalStateException(
-        s"streaming query $name did not finish within ${timeoutMs}ms; " +
-        "partial sink contents discarded")
+        s"streaming query $name did not finish within $TimeoutMs ms; " +
+        "stopped, partial output discarded")
     }
-    spark.table(name)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import graft.io.MutableTable
 
 /** foreachBatch upsert sink — the incremental-materialized-view
@@ -29,37 +28,20 @@ object UpsertSink {
   /** Run `stream` to completion (AvailableNow), merging each batch into
     * the latest-per-key state table under `stateBase`; returns the
     * final state. `orderCols` must totally order rows within a key.
-    * `keepVersions` bounds the retained copy-on-write history (≥ 2 so
-    * a crash mid-write never strands the stream without a readable
-    * parent version).
+    * The state table keeps 2 copy-on-write versions, so a crash
+    * mid-write never strands the stream without a readable parent
+    * version.
     */
   def runLatestPerKey(spark: SparkSession, stream: DataFrame,
                       keys: Seq[String], orderCols: Seq[String],
-                      stateBase: String, timeoutMs: Long = 120000,
-                      keepVersions: Int = 2): DataFrame = {
-    require(keepVersions >= 2, s"keepVersions must be >= 2, got $keepVersions")
+                      stateBase: String): DataFrame = {
     // openOrInit: a rerun over a surviving state dir resumes merging
     // into it (mergeLatest is order-independent, so replayed rows
     // converge) instead of failing on the existing-table guard
-    val table = MutableTable.openOrInit(spark, stateBase, stream.schema,
-      keepVersions)
-    @volatile var batches = 0L
-    val q = stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        table.mergeLatest(batch, keys, orderCols)
-        batches += 1
-        ()
-      }
-      .start()
-    val finished = q.awaitTermination(timeoutMs)
-    if (!finished) {
-      q.stop()
-      throw new IllegalStateException(
-        s"upsert stream did not finish within ${timeoutMs}ms")
+    val table = MutableTable.openOrInit(spark, stateBase, stream.schema)
+    StreamingFlows.runEachBatch(spark, stream, "upsert") { batch =>
+      table.mergeLatest(batch, keys, orderCols)
     }
-    require(batches > 0, "stream produced no batches")
     table.read()
   }
 }

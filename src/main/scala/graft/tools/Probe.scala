@@ -20,8 +20,9 @@ import graft.plans.PlanShape
   *   scripts/run_main.sh graft.tools.Probe verify <sfDir> <outDir> [query…]
   *   scripts/run_main.sh graft.tools.Probe sql    "<SELECT …>" [sfDir]
   *
-  *  - `time`: first one `[probe] prewarm` line for the session set-up
-  *    (`warmUp` + `prewarmFixtures`, e.g. the k-core fixture); then, per
+  *  - `time`: first the session set-up, one `[probe] prewarm:<step>`
+  *    line per step (`warmUp`, then each of `prewarmSteps`, e.g. the
+  *    k-core fixture) and a `[probe] prewarm` total; then, per
   *    query, a warm pass (codegen, IO and shared census builds) and a
   *    measured pass into the noop sink, reporting its wall seconds and
   *    Spark jobs, stages and tasks. At bench scale every query is
@@ -86,29 +87,41 @@ object Probe {
     } finally spark.stop()
   }
 
-  /** Runs `warmUp` + `prewarmFixtures` with a [[Census]] attached and
-    * says one `[probe] prewarm` line with their seconds and Spark jobs,
-    * stages and tasks, after one line per job under `trace`; returns
-    * the census. Its jobs carry the description `prewarm`.
+  /** Runs `warmUp`, then each of `TrainingQueries.prewarmSteps`, with a
+    * [[Census]] attached and says one `[probe] prewarm:<step>` line per
+    * step and one `[probe] prewarm` total line, each with its seconds
+    * and Spark jobs, stages and tasks, after one line per job under
+    * `trace`; returns the census. Its jobs carry the description
+    * `prewarm`.
     */
   private[graft] def prewarm(spark: SparkSession, sfDir: String,
       trace: Boolean, say: String => Unit): Census = {
     val census = new Census
     spark.sparkContext.addSparkListener(census)
-    val wall = try {
-      val t0 = System.nanoTime()
+    val steps = try {
       spark.sparkContext.setJobDescription("prewarm")
-      try {
-        GraftSession.warmUp(spark, sfDir)
-        graft.queries.TrainingQueries.prewarmFixtures(spark, sfDir)
+      try (("warmup" -> (GraftSession.warmUp _)) +:
+          graft.queries.TrainingQueries.prewarmSteps).map { case (name, step) =>
+        val before = census.counts
+        val t0 = System.nanoTime()
+        step(spark, sfDir)
+        val wall = (System.nanoTime() - t0) / 1e9
+        Bridge.drainListeners(spark)
+        val (j, s, t) = census.counts
+        (name, wall, (j - before._1, s - before._2, t - before._3))
       } finally spark.sparkContext.setJobDescription(null)
-      val w = (System.nanoTime() - t0) / 1e9
-      Bridge.drainListeners(spark)
-      w
     } finally spark.sparkContext.removeSparkListener(census)
     if (trace) census.jobLines.foreach(say)
-    say(f"[probe] ${"prewarm"}%-28s ${census.summary(wall)}")
+    steps.foreach { case (name, wall, counts) =>
+      say(f"[probe] ${"prewarm:" + name}%-28s ${summary(wall, counts)}")
+    }
+    say(f"[probe] ${"prewarm"}%-28s ${census.summary(steps.map(_._2).sum)}")
     census
+  }
+
+  private def summary(wall: Double, counts: (Int, Int, Long)): String = {
+    val (jobs, stages, tasks) = counts
+    f"$wall%8.2f s  jobs=$jobs%-4d stages=$stages%-5d tasks=$tasks%-6d"
   }
 
   /** Runs `mode` over `names` with a [[Census]] attached for the loop
@@ -179,8 +192,7 @@ object Probe {
     private val lines = mutable.ArrayBuffer.empty[String]
 
     def counts: (Int, Int, Long) = synchronized((jobs, stages, tasks))
-    def summary(wall: Double): String = synchronized(
-      f"$wall%8.2f s  jobs=$jobs%-4d stages=$stages%-5d tasks=$tasks%-6d")
+    def summary(wall: Double): String = Probe.summary(wall, counts)
     def jobLines: Seq[String] = synchronized(lines.toList)
     def reset(): Unit = synchronized {
       jobs = 0; stages = 0; tasks = 0L

@@ -44,10 +44,17 @@ class QueriesSmokeSpec extends SparkSpec with BeforeAndAfterAll {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows on sf0.001") {
+      val conf = spark.conf.getAll
       val df = fn(spark, sfDir)
       val shape = PlanShape.row(name, df)
       actual(name) = shape
       assert(df.count() > 0)
+      // building and running a query leaves the shared session's conf
+      // as it found it
+      val after = spark.conf.getAll
+      val changed = (conf.keySet ++ after.keySet).filter(k => conf.get(k) != after.get(k))
+      assert(changed.isEmpty, s"$name changed the session conf: " +
+        changed.map(k => s"$k: ${conf.get(k)} -> ${after.get(k)}").mkString(", "))
       val expected = baseline.getOrElse(name, "(no row)")
       assert(shape == expected, s"plan shape of $name differs from " +
         s"$baselineFile (all rows: $actualFile)\n" +

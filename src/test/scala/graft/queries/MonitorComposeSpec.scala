@@ -19,9 +19,7 @@ class MonitorComposeSpec extends SparkSpec {
     // Batch replay: same daily counts restricted to windows whose end
     // is at or below max(ts) - 1 day (the availableNow watermark), then
     // the identical CUSUM chain.
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val e = spark.read.parquet(s"$sfDir/events.parquet")
-      .withColumn("ts", graft.Tables.normalizedTs(schema("ts").dataType))
+    val e = graft.Tables.events(spark, sfDir)
     val wm = e.agg(max(col("ts"))).head().getTimestamp(0).toInstant
       .minusSeconds(86400)
     val daily = e

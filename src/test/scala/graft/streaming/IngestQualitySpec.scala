@@ -47,7 +47,7 @@ class IngestQualitySpec extends SparkSpec {
     val gated = IngestQuality.gate(stream, "text", "doc_id")
     assert(gated.isStreaming)
     val out = StreamingFlows.runAvailableNow(spark, gated,
-      s"ingest_quality_spec_${System.nanoTime}")
+      "ingest_quality_spec")
     assert(out.count() == 2)
     assert(out.filter(col("keep")).count() == 2)
   }

@@ -36,7 +36,7 @@ class StreamDecontamSpec extends SparkSpec {
       .parquet(s"$work/in/b=*")
     val streamed = StreamingFlows.runAvailableNow(spark,
         StreamDecontam.flag(stream, "text", "doc_id", ref, 8, 4, 2),
-        s"decontam_spec_${System.nanoTime}")
+        "decontam_spec")
       .orderBy($"doc_id").collect().toSeq
     val got = streamed.map(r =>
       (r.getLong(0), r.getLong(1), r.getBoolean(2)))

@@ -1,7 +1,14 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 class StreamingFlowsSpec extends SparkSpec {
   import spark.implicits._
@@ -9,10 +16,7 @@ class StreamingFlowsSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("streaming daily agg over the events drop-dir matches the batch result") {
-    val batchRaw = spark.read.parquet(s"$sfDir/events.parquet")
-    val stream = StreamingFlows.source(spark, sfDir, batchRaw.schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(batchRaw.schema("ts").dataType))
+    val stream = graft.Tables.eventsStream(spark, sfDir)
     val agg = StreamingFlows.dailyFlowAgg(stream, "ts", "event_type", "value")
     val got = StreamingFlows.runAvailableNow(spark, agg, "daily_stream")
       .select($"day", $"event_type", $"n")
@@ -35,10 +39,7 @@ class StreamingFlowsSpec extends SparkSpec {
   }
 
   test("streaming daily quantiles equal exact order statistics per finalized window") {
-    val batchRaw = spark.read.parquet(s"$sfDir/events.parquet")
-    val stream = StreamingFlows.source(spark, sfDir, batchRaw.schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(batchRaw.schema("ts").dataType))
+    val stream = graft.Tables.eventsStream(spark, sfDir)
       .withColumn("value", $"value".cast("double"))
     val agg = StreamingFlows.dailyQuantiles(stream, "ts", "event_type", "value")
     val got = StreamingFlows.runAvailableNow(spark, agg, "quant_stream")
@@ -68,10 +69,7 @@ class StreamingFlowsSpec extends SparkSpec {
 
   test("stream-static enrichment agg matches the batch join result " +
        "minus unfinalized windows") {
-    val batchRaw = spark.read.parquet(s"$sfDir/events.parquet")
-    val stream = StreamingFlows.source(spark, sfDir, batchRaw.schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(batchRaw.schema("ts").dataType))
+    val stream = graft.Tables.eventsStream(spark, sfDir)
       .withColumn("value", $"value".cast("decimal(18,2)"))
     val dim = graft.Tables.customer(spark, sfDir)
       .select($"c_custkey", $"c_mktsegment")
@@ -99,10 +97,7 @@ class StreamingFlowsSpec extends SparkSpec {
   }
 
   test("streaming dedup drops duplicate keys within the watermark") {
-    val batchRaw = spark.read.parquet(s"$sfDir/events.parquet")
-    val stream = StreamingFlows.source(spark, sfDir, batchRaw.schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(batchRaw.schema("ts").dataType))
+    val stream = graft.Tables.eventsStream(spark, sfDir)
     val dedup = StreamingFlows.streamingDedup(stream, "ts", "1 day", Seq("user_id"))
     val got = StreamingFlows.runAvailableNow(spark, dedup, "dedup_stream")
     val users = spark.read.parquet(s"$sfDir/events.parquet")
@@ -112,10 +107,7 @@ class StreamingFlowsSpec extends SparkSpec {
 
   test("streaming session windows emit exactly the watermark-finalized " +
        "batch sessions") {
-    val batchRaw = spark.read.parquet(s"$sfDir/events.parquet")
-    val stream = StreamingFlows.source(spark, sfDir, batchRaw.schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(batchRaw.schema("ts").dataType))
+    val stream = graft.Tables.eventsStream(spark, sfDir)
       .withColumn("value", $"value".cast("decimal(18,2)"))
     val sess = StreamingFlows.sessionAgg(stream, "ts", "user_id", "value",
       gap = "1 hour", watermark = "2 hours")
@@ -144,10 +136,7 @@ class StreamingFlowsSpec extends SparkSpec {
 
   test("streaming daily HLL sketch estimates equal the batch build " +
        "per finalized window") {
-    val batchRaw = spark.read.parquet(s"$sfDir/events.parquet")
-    val stream = StreamingFlows.source(spark, sfDir, batchRaw.schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(batchRaw.schema("ts").dataType))
+    val stream = graft.Tables.eventsStream(spark, sfDir)
     val agg = StreamingFlows.dailyKeySketch(stream, "ts", "user_id")
     val got = StreamingFlows.runAvailableNow(spark, agg, "sketch_stream")
       .select($"day", hll_sketch_estimate($"sk").as("est"))
@@ -172,5 +161,53 @@ class StreamingFlowsSpec extends SparkSpec {
       .agg(countDistinct($"user_id").as("n"))
       .as[(java.sql.Date, Long)].collect().toMap
     assert(got == exact)
+  }
+
+  test("statePartitions sizes only the stream's state: the caller's conf, " +
+       "catalog and earlier results stay as they were") {
+    val key = "spark.sql.shuffle.partitions"
+    val session = spark.conf.get(key)
+    assert(session != "3")
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress): Unit
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    def daily = StreamingFlows.dailyFlowAgg(
+      graft.Tables.eventsStream(spark, sfDir), "ts", "event_type", "value")
+    def tables = spark.catalog.listTables().collect().map(_.name).toSeq.sorted
+    val tablesBefore = tables
+    spark.streams.addListener(listener)
+    try {
+      // a foreachBatch body runs mid-stream; the caller's session it
+      // reads holds its own value, not the stream's 3
+      val seen = new ConcurrentLinkedQueue[String]
+      val each = daily.writeStream.foreachBatch {
+        (batch: DataFrame, _: Long) =>
+          batch.count() // a stateful batch must be consumed in full
+          seen.add(spark.conf.get(key)): Unit
+      }
+      StreamingFlows.run(spark, each, "spec_each", statePartitions = 3)
+      assert(!seen.isEmpty && seen.asScala.forall(_ == session), seen)
+
+      val first = StreamingFlows.runAvailableNow(spark, daily, "spec_mem",
+        statePartitions = 3)
+      val rows = first.collect().toSet
+      assert(rows.nonEmpty)
+      StreamingFlows.runAvailableNow(spark, daily, "spec_mem",
+        statePartitions = 3).count()
+      assert(first.collect().toSet == rows)
+
+      Bridge.drainListeners(spark)
+      val stateful = progress.asScala.toSeq.filter(_.stateOperators.nonEmpty)
+      assert(stateful.nonEmpty)
+      assert(stateful.forall(_.stateOperators(0).numShufflePartitions == 3),
+        stateful.map(_.stateOperators(0).numShufflePartitions))
+    } finally spark.streams.removeListener(listener)
+    assert(spark.conf.get(key) == session)
+    assert(tables == tablesBefore)
   }
 }

@@ -9,14 +9,11 @@ class StreamingJoinSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("stream-stream interval join matches the batch interval join") {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def src() = StreamingFlows.source(spark, sfDir, schema,
-        globFilter = Some("events.parquet"))
-      .withColumn("ts", graft.Tables.normalizedTs(schema("ts").dataType))
-    val clicks = src().filter($"event_type" === "click")
+    val events = graft.Tables.eventsStream(spark, sfDir)
+    val clicks = events.filter($"event_type" === "click")
       .select($"event_id".as("click_id"), $"user_id", $"ts".as("cts"))
       .withWatermark("cts", "1 hour")
-    val purchases = src().filter($"event_type" === "purchase")
+    val purchases = events.filter($"event_type" === "purchase")
       .select($"event_id".as("purchase_id"), $"user_id".as("p_user_id"),
               $"ts".as("pts"))
       .withWatermark("pts", "1 hour")

@@ -37,12 +37,17 @@ class ProbeSpec extends SparkSpec {
     val census = Probe.prewarm(spark, sfDir, trace = true, lines += _)
     val (jobs, _, _) = census.counts
     assert(jobs >= 1, lines)
-    assert(lines.last.startsWith("[probe] prewarm") &&
+    assert(lines.last.startsWith("[probe] prewarm ") &&
       lines.last.contains(s" s  jobs=$jobs "), lines.last)
-    val jobLines = lines.init
-    assert(jobLines.size == jobs && jobLines.forall(_.startsWith("[probe]   job ")),
-      lines)
+    val (jobLines, stepLines) = lines.init.partition(_.startsWith("[probe]   job "))
+    assert(jobLines.size == jobs, lines)
     assert(jobLines.exists(_.contains(" prewarm | ")), jobLines)
+    // one row per step, in order: warmUp, then the fixture steps; their
+    // jobs add up to the total
+    val steps = "warmup" +: graft.queries.TrainingQueries.prewarmSteps.map(_._1)
+    assert(stepLines.map(_.split("\\s+")(1)) == steps.map("prewarm:" + _), stepLines)
+    val stepJobs = stepLines.map(l => "jobs=(\\d+)".r.findFirstMatchIn(l).get.group(1).toInt)
+    assert(stepJobs.sum == jobs && stepJobs.head >= 1, stepLines)
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
 
