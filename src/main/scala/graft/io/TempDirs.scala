@@ -28,7 +28,10 @@ object TempDirs {
     p
   }
 
-  private def deleteRecursively(root: Path): Unit =
+  /** Delete `root` and everything under it now, best-effort (the
+    * same walk the exit hook runs), for a query that frees its scratch
+    * space before it returns. */
+  def deleteRecursively(root: Path): Unit =
     try {
       if (Files.exists(root)) {
         val walk = Files.walk(root)

@@ -2306,22 +2306,16 @@ object TrainingQueries {
     */
   def t239PipelineResume(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_t239_" +
-      s"${System.nanoTime}"
+    val dir = graft.io.TempDirs.create("graft_t239")
     val stages = t48Stages(docs)
-    graft.pipeline.Curation.runCheckpointed(docs, stages.take(2), dir)
-    val ledger = graft.pipeline.Curation.runCheckpointed(docs, stages, dir)
-      .ledger
+    graft.pipeline.Curation.runCheckpointed(docs, stages.take(2), dir.toString)
+    val ledger = graft.pipeline.Curation.runCheckpointed(docs, stages,
+      dir.toString).ledger
     // the ledger lineage reads the checkpoint parquet lazily — collect
     // it into a literal frame so the checkpoint tree can be deleted NOW
     // instead of leaking two stage trees per bench pass into /tmp
     val out = ledger.localCheckpoint(true)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dir))
+    graft.io.TempDirs.deleteRecursively(dir)
     out
   }
 
@@ -5148,19 +5142,13 @@ object TrainingQueries {
     * full O(m^1.5) closure beside t192's own run every battery
     * (19.5 s + 11.7 s on the round-10 driver) even though both gates
     * are defined on the SAME graph — one localCheckpoint'd 1-row frame
-    * serves both, both gates still enforce. Keyed by session identity
-    * too: a cached frame must never outlive its SparkSession (sbt test
-    * suites restart sessions).
+    * serves both, both gates still enforce.
     */
-  private val triangleCensusCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   private def exactTriangleCensus(spark: SparkSession,
                                   sfDir: String): DataFrame =
-    triangleCensusCache.getOrElseUpdate(
-      s"${System.identityHashCode(spark)}:$sfDir",
+    sharedCensus(spark, sfDir, "triangle_census")(
       graft.operators.Graph.triangleStatsOnCollapsed(
-          coPurchaseCollapsed(spark, sfDir))
-        .localCheckpoint(true))
+        coPurchaseCollapsed(spark, sfDir)))
 
   /** t235_triangle_doulion — the 100×-scale member of the t192
     * triangle family: Doulion edge-sampling (keep probability 0.2 by
@@ -5552,8 +5540,7 @@ object TrainingQueries {
     */
   def t250ModelRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_t250_" +
-      s"${System.nanoTime}"
+    val dir = graft.io.TempDirs.create("graft_t250")
     // BPE: save, validated load, both encodes (rules from the shared
     // bpeRules12 census — identical training, see t55's scaladoc)
     val rules = bpeRules12(spark, sfDir)
@@ -5573,12 +5560,7 @@ object TrainingQueries {
     val scoredDirect = Importance.dsirWeights(docs, "doc_id", "text",
       target = col("lang") === "en")
     // loads are eager collects — the files are no longer needed
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dir))
+    graft.io.TempDirs.deleteRecursively(dir)
     def mismatches(a: DataFrame, b: DataFrame): DataFrame = {
       val cols = a.columns.filter(_ != "doc_id").toSeq
       def packed(df: DataFrame, as: String) = df.select(col("doc_id"),

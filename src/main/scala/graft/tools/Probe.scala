@@ -36,9 +36,10 @@ import graft.plans.PlanShape
   *    jobs the query pays before its action), then its
   *    [[graft.plans.PlanShape]] row — the row `docs/plan_shape.tsv`
   *    holds at sf0.001.
-  *  - `verify`: each result as [[graft.Verify]] writes it, plus an
-  *    `oracle_sql.json` holding only the named queries, for
-  *    `scripts/check_oracle.py <sfDir> <outDir>`.
+  *  - `verify`: each result as [[graft.Verify]] writes it, then its
+  *    Verify gates (`gates k/n pass`, one `GATE FAIL` line per failing
+  *    gate), plus an `oracle_sql.json` holding only the named queries,
+  *    for `scripts/check_oracle.py <sfDir> <outDir>`.
   *  - `sql`: the first 20 rows and the row count of one SQL statement
   *    over the tables registered as views (SqlFacade).
   *
@@ -163,7 +164,10 @@ object Probe {
         case "verify" =>
           val df = build()
           phase("action")(Verify.dump(df, s"$outDir/$name"))
-          s"wrote $outDir/$name"
+          val failed = Verify.gateFailures(spark, outDir, Seq(name))
+          failed.foreach(f => say(s"[probe]   GATE FAIL: $f"))
+          val n = Verify.gates.count(_.query == name)
+          s"wrote $outDir/$name, gates ${n - failed.size}/$n pass"
       }
     }
     spark.sparkContext.addSparkListener(census)

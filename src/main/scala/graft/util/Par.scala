@@ -44,11 +44,5 @@ object Par {
     (await(fa), await(fb), await(fc))
   }
 
-  def par4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
-    val fa = Future(a)(ec); val fb = Future(b)(ec)
-    val fc = Future(c)(ec); val fd = Future(d)(ec)
-    (await(fa), await(fb), await(fc), await(fd))
-  }
-
   private def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
 }

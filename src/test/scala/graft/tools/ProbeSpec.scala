@@ -51,6 +51,30 @@ class ProbeSpec extends SparkSpec {
     assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
   }
 
+  test("Probe verify writes each result and reports its gates") {
+    import spark.implicits._
+    val out = graft.io.TempDirs.create("probe_verify").toString
+    // a planted t58 result that breaks one of its three gates and lacks
+    // the row of another
+    val queries: Map[String, Probe.Query] = Map(
+      "t58_pq_check" -> ((_, _) => Seq("roundtrip_violations" -> 1.0,
+        "adc_mismatches" -> 0.0).toDF("check", "value")),
+      "t74_compress_ratio" -> SparkEntry.queries("t74_compress_ratio"),
+      "q1_agg" -> SparkEntry.queries("q1_agg"))
+    val lines = mutable.ArrayBuffer.empty[String]
+    Probe.run(spark, "verify", sfDir, out,
+      Seq("t58_pq_check", "t74_compress_ratio", "q1_agg"), queries.get, lines += _)
+
+    assert(lines.filter(_.contains("GATE FAIL")) == Seq(
+      "[probe]   GATE FAIL: t58_pq_check roundtrip_violations == 0",
+      "[probe]   GATE FAIL: t58_pq_check recall_at_5 >= 0.7"), lines)
+    val results = lines.filterNot(_.contains("GATE FAIL"))
+    assert(results.size == 3, lines)
+    assert(results(0).endsWith(s"wrote $out/t58_pq_check, gates 1/3 pass"), results)
+    assert(results(1).endsWith(s"wrote $out/t74_compress_ratio, gates 1/1 pass"), results)
+    assert(results(2).endsWith(s"wrote $out/q1_agg, gates 0/0 pass"), results)
+  }
+
   test("Probe trace names every job of the measured pass by query and phase") {
     val lines = mutable.ArrayBuffer.empty[String]
     Probe.run(spark, "trace", sfDir, "", Seq("q1_agg"),
