@@ -11,11 +11,13 @@ import graft.ops._
   * manual sequencing the reference's analyst performed, minus the
   * copy-paste drift.
   *
-  * Scale design: the address book and wallet-location dims broadcast;
-  * the only real shuffles are (a) the groupBy(txid) in groupedFlow and
-  * (b) dedup windows on transaction_hash — both key-partitioned and
-  * AQE-coalesced. Stage outputs partition by the pre/post split so the
-  * analysis read path prunes whole directories (SURVEY §4).
+  * Scale design: the address book, the wallet-location dim and the
+  * tracked txid set broadcast, so `run` shuffles twice: (a) the
+  * address-book dedup's aggregate on (wallet, address) and (b) one
+  * exchange on transaction_hash in `txidSum`, shared by the union
+  * distinct and the D2 window — both key-partitioned and AQE-coalesced.
+  * The located ledgers partition by location so the analysis read path
+  * prunes whole directories (SURVEY §4).
   */
 final class BtcPipeline(spark: SparkSession, outDir: String,
                         splitDate: String = "2021-09-24") {
@@ -54,8 +56,11 @@ final class BtcPipeline(spark: SparkSession, outDir: String,
     */
   def txidSum(input: DataFrame, output: DataFrame): DataFrame = {
     val cols = Seq("block_timestamp", "wallet", "wallet_address", "transaction_hash")
+    // one hash exchange on the D2 key serves both steps: the distinct's
+    // four-column key and the window's key both contain it
     val unioned = input.select(cols.map(col): _*)
       .unionByName(output.select(cols.map(col): _*))
+      .repartition(col("transaction_hash"))
       .distinct()
     write(Dedup.removeAllDuplicated(unioned, Seq("transaction_hash")), "txid_sum")
   }
@@ -66,7 +71,9 @@ final class BtcPipeline(spark: SparkSession, outDir: String,
     * semi-join (J2 — the reference's CTE-filtered key set).
     */
   def flowLedger(tx: DataFrame, txidSum: DataFrame, pre: Boolean): DataFrame = {
-    val txids = txidSum.select(col("transaction_hash")).distinct()
+    // no distinct: a semi-join ignores duplicate keys, and D2 already
+    // left one row per hash
+    val txids = txidSum.select(col("transaction_hash"))
     val flow = Flows.simpleFlow(tx)
       .join(broadcast(txids), col("txid") === col("transaction_hash"), "left_semi")
     val split = Flows.splitAt(flow, splitDate, pre)

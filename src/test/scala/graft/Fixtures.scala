@@ -85,7 +85,7 @@ object Fixtures {
     addressBook.toDF()
   }
   def walletLocationPath(): String = {
-    val f = java.nio.file.Files.createTempFile("wallet_location", ".ndjson")
+    val f = graft.io.TempDirs.create("wallet_location").resolve("wallet_location.ndjson")
     java.nio.file.Files.writeString(f, walletLocationNdjson)
     f.toString
   }

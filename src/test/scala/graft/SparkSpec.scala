@@ -12,7 +12,7 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val s = GraftSession.builder("graft-test", master = Some("local[4]"))
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        graft.io.TempDirs.create("graft_wh").toString)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -7,7 +7,7 @@ class MutableTableSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshBase(tag: String) =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/t"
+    graft.io.TempDirs.create(tag).toString + "/t"
 
   test("deleteWhere removes TRUE rows only; NULL predicate keeps the row") {
     val base = freshBase("mt_delete")

@@ -89,7 +89,7 @@ class BpeSpec extends SparkSpec {
        "list; validation rejects truncated or edited tables") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val rules = Bpe.learnMerges(docs, "text", numMerges = 5)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_rules").toString
+    val dir = graft.io.TempDirs.create("bpe_rules").toString
     Bpe.saveRules(rules, s"$dir/rules")
     val loaded = Bpe.loadRules(spark, s"$dir/rules")
     val fresh = rules.orderBy($"step").select($"left", $"right")

@@ -92,7 +92,7 @@ class ImportanceSpec extends SparkSpec {
     val model = Importance.dsirFit(docs, "doc_id", "text",
       target = $"lang" === "en")
     assert(model.count() == 64)
-    val dir = java.nio.file.Files.createTempDirectory("dsir_model").toString
+    val dir = graft.io.TempDirs.create("dsir_model").toString
     Importance.saveModel(model, s"$dir/m")
     val lr = Importance.loadModel(spark, s"$dir/m")
     assert(lr.length == 64)

@@ -35,7 +35,7 @@ class SnapshotDiffSpec extends SparkSpec {
   }
 
   test("applyDiff converges the table to the new snapshot, touching only changes") {
-    val work = java.nio.file.Files.createTempDirectory("cdc_spec").toString
+    val work = graft.io.TempDirs.create("cdc_spec").toString
     val old = snap((1L, "a", "x"), (2L, "b", "x"), (3L, "c", "x"),
                    (5L, "e", "x"))
     val nw  = snap((2L, "b", "x"), (3L, "c2", "x"), (4L, "d", "x"),

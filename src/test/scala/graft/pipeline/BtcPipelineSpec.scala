@@ -1,9 +1,19 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import graft.{Fixtures, SparkSpec}
 import graft.ops.{DailyAgg, Enrich}
 import graft.analytics.Ols
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** End-to-end pipeline test (SURVEY.md §5): mini blockchain → full chain
   * (dedup → explode+join legs → union-distinct → remove-all dedup →
@@ -13,8 +23,7 @@ import org.apache.spark.sql.functions._
 class BtcPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val outDir =
-    java.nio.file.Files.createTempDirectory("btc_pipeline").toString
+  private lazy val outDir = graft.io.TempDirs.create("btc_pipeline").toString
   private lazy val (pre, post) = new BtcPipeline(spark, outDir).run(
     Fixtures.txDf(spark),
     Fixtures.flatInputsDf(spark),
@@ -68,5 +77,47 @@ class BtcPipelineSpec extends SparkSpec {
     assert(locs.contains(None))
     // US and USA stay distinct opaque strings
     assert(locs.contains(Some("US")) && locs.contains(Some("USA")))
+  }
+
+  /** `body`'s result and the executed plans of the queries it runs,
+    * final AQE stages included. */
+  private def withPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    Bridge.drainListeners(spark)
+    spark.listenerManager.register(listener)
+    val out = try { val r = body; Bridge.drainListeners(spark); r }
+    finally spark.listenerManager.unregister(listener)
+    (out, plans.asScala.toSeq)
+  }
+
+  private object Nodes extends AdaptiveSparkPlanHelper {
+    def apply(plan: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(plan) { case n => n }
+  }
+
+  test("plans: txidSum writes through one shuffle, flowLedger broadcasts no aggregate") {
+    val p = new BtcPipeline(spark, graft.io.TempDirs.create("btc_plans").toString)
+    val book = p.dedupAddressBook(Fixtures.addressBookDf(spark))
+    val inLeg = p.txidLeg(Fixtures.flatInputsDf(spark), book, "txid_input")
+    val outLeg = p.txidLeg(Fixtures.flatOutputsDf(spark), book, "txid_output")
+    val (tracked, sumPlans) = withPlans(p.txidSum(inLeg, outLeg))
+    assert(sumPlans.size == 1)
+    val shuffles = Nodes(sumPlans.head).collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, sumPlans.head)
+    assert((shuffles.head.outputPartitioning match {
+      case h: HashPartitioning => h.references.map(_.name).toSet
+      case other => Set(other.toString)
+    }) == Set("transaction_hash"))
+
+    val (_, flowPlans) = withPlans(p.flowLedger(Fixtures.txDf(spark), tracked, pre = false))
+    assert(flowPlans.size == 1)
+    val broadcasts = Nodes(flowPlans.head).collect { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.nonEmpty, flowPlans.head)
+    assert(broadcasts.forall(b =>
+      !Nodes(b).exists(_.isInstanceOf[BaseAggregateExec])), flowPlans.head)
   }
 }

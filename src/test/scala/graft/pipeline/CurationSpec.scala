@@ -70,7 +70,7 @@ class CurationSpec extends SparkSpec {
   test("runCheckpointed: a runner killed mid-chain resumes at the " +
        "failed stage — completed stages never re-invoke and the " +
        "resumed ledger is bit-identical to an uninterrupted run") {
-    val dir = java.nio.file.Files.createTempDirectory("curation_ckpt")
+    val dir = graft.io.TempDirs.create("curation_ckpt")
       .toString
     val invocations = scala.collection.mutable.Map[String, Int]()
       .withDefaultValue(0)
@@ -107,7 +107,7 @@ class CurationSpec extends SparkSpec {
 
   test("runCheckpointed: a half-written stage (no _SUCCESS) re-runs " +
        "instead of being trusted") {
-    val dir = java.nio.file.Files.createTempDirectory("curation_half")
+    val dir = graft.io.TempDirs.create("curation_half")
       .toString
     Curation.runCheckpointed(corpus, stages.take(1), dir)
     // vandalize: remove the success marker of stage 1
@@ -123,7 +123,7 @@ class CurationSpec extends SparkSpec {
 
   test("runCheckpointed: a changed stage LIST invalidates from the first " +
        "divergent stage — _SUCCESS alone is never trusted") {
-    val dir = java.nio.file.Files.createTempDirectory("curation_fp").toString
+    val dir = graft.io.TempDirs.create("curation_fp").toString
     def counted(names: Seq[String], calls: Array[Int]): Seq[Curation.Stage] =
       stages.zip(names).zipWithIndex.map { case (((_, f), name), i) =>
         name -> { (in: DataFrame) => calls(i) += 1; f(in) }

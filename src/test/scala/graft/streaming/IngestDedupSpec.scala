@@ -9,7 +9,7 @@ class IngestDedupSpec extends SparkSpec {
   private def docsDf(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
 
   test("cross-batch and intra-batch dups drop; first arrival survives") {
-    val work = java.nio.file.Files.createTempDirectory("ingest_spec").toString
+    val work = graft.io.TempDirs.create("ingest_spec").toString
     // batch files written sequentially: b0 has an intra-batch dup of
     // "alpha" (min id 1 must survive); b1 re-delivers "alpha" and
     // "beta" under new ids (must drop) and brings "gamma" (must stay)
@@ -28,7 +28,7 @@ class IngestDedupSpec extends SparkSpec {
   }
 
   test("replay over surviving state converges (no duplicates)") {
-    val work = java.nio.file.Files.createTempDirectory("ingest_spec2").toString
+    val work = graft.io.TempDirs.create("ingest_spec2").toString
     docsDf(Seq((1L, "x"), (2L, "y"))).coalesce(1).write.parquet(s"$work/in")
     def run() = {
       val stream = spark.readStream
@@ -51,7 +51,7 @@ class IngestDedupSpec extends SparkSpec {
   test("sketch cap falls back to exact-verify-only with identical results") {
     // maxSketchBytes = 0 forces the no-sketch path; the final state
     // must be byte-identical to the sketched run on the same input
-    val work = java.nio.file.Files.createTempDirectory("ingest_spec4").toString
+    val work = graft.io.TempDirs.create("ingest_spec4").toString
     docsDf(Seq((1L, "alpha"), (5L, "alpha"), (2L, "beta")))
       .coalesce(1).write.parquet(s"$work/in/b=0")
     docsDf(Seq((10L, "alpha"), (11L, "beta"), (12L, "gamma")))
@@ -82,7 +82,7 @@ class IngestDedupSpec extends SparkSpec {
     val forced = IngestDedup.pickShards(10000000L, 0.01, 256L << 20)
     assert(forced > 1, s"expected a multi-shard pick, got $forced")
     assert(IngestDedup.pickShards(10000000L, 0.01, 0L) == 0) // cap → exact-only
-    val work = java.nio.file.Files.createTempDirectory("ingest_spec5").toString
+    val work = graft.io.TempDirs.create("ingest_spec5").toString
     docsDf(Seq((1L, "alpha"), (5L, "alpha"), (2L, "beta")))
       .coalesce(1).write.parquet(s"$work/in/b=0")
     docsDf(Seq((10L, "alpha"), (11L, "beta"), (12L, "gamma")))
@@ -115,7 +115,7 @@ class IngestDedupSpec extends SparkSpec {
   }
 
   test("state holds exactly one row per distinct text under heavy dup load") {
-    val work = java.nio.file.Files.createTempDirectory("ingest_spec3").toString
+    val work = graft.io.TempDirs.create("ingest_spec3").toString
     val rows = (0L until 300L).map(i => (i, s"t${i % 25}"))  // 25 texts × 12 copies
     docsDf(rows).repartition(3).write.parquet(s"$work/in")
     val stream = spark.readStream

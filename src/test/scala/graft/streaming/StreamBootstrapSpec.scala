@@ -23,7 +23,7 @@ class StreamBootstrapSpec extends SparkSpec {
         Timestamp.valueOf(f"2024-01-0$day%d 12:00:00"))
     }
     val df = rows.toDF("g", "id", "v", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("boot_stream").toString
+    val dir = graft.io.TempDirs.create("boot_stream").toString
     df.write.mode("overwrite").parquet(dir)
 
     val withReps = (frame: org.apache.spark.sql.DataFrame) => frame

@@ -12,7 +12,7 @@ class StreamComposeSpec extends SparkSpec {
 
   test("Flows.simpleFlow runs identically over a stream and a batch of the same data") {
     val txDf = Fixtures.txDf(spark)
-    val dir = java.nio.file.Files.createTempDirectory("tx_stream").toString
+    val dir = graft.io.TempDirs.create("tx_stream").toString
     txDf.write.mode("overwrite").parquet(dir)
 
     val stream = StreamingFlows.source(spark, dir, txDf.schema)

@@ -12,7 +12,7 @@ class StreamDecontamSpec extends SparkSpec {
 
   test("a streamed document quoting the eval set flags; clean ones don't; " +
        "the streamed result equals the batch run row-for-row") {
-    val work = java.nio.file.Files.createTempDirectory("decontam").toString
+    val work = graft.io.TempDirs.create("decontam").toString
     // reference = one eval document's winnowing fingerprint union
     val ref = TextDedup.winnowingSets(
         Seq((0L, evalText)).toDF("doc_id", "text"), "text", "doc_id", 8, 4)

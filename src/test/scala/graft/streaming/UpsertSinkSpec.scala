@@ -7,7 +7,7 @@ class UpsertSinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("multi-batch upsert converges to batch keep-latest, versions persist") {
-    val work = java.nio.file.Files.createTempDirectory("upsert_spec").toString
+    val work = graft.io.TempDirs.create("upsert_spec").toString
     val rows = Seq(
       (1L, "a", ts("2024-01-01 00:00:00"), 1L),
       (1L, "b", ts("2024-01-02 00:00:00"), 2L), // later — must win
@@ -34,7 +34,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("single-key stream of updates keeps only the newest row") {
-    val work = java.nio.file.Files.createTempDirectory("upsert_spec2").toString
+    val work = graft.io.TempDirs.create("upsert_spec2").toString
     val rows = (1L to 8L).map(i =>
         (42L, s"v$i", ts(f"2024-01-0${i}%d 00:00:00"), i))
       .toDF("user_id", "event_type", "ts", "event_id")
